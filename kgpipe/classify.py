@@ -81,26 +81,31 @@ def _with_scores(feats: DataFrame, keywords: Dict[str, str]) -> DataFrame:
     # of elements, so the 36 removes scan ~5 items instead of ~150.
     # Counts are IDENTICAL — a non-keyword token never matches any
     # category's array_remove, so dropping it changes no size delta.
-    kws = sorted(set(keywords.values()))
+    # Both expressions are built as SQL text and parsed once: the
+    # Column-API form cost ~3.9k py4j round trips per call (measured
+    # on 2k rows at local[4]: plan build 0.50-0.64 s → 0.07-0.09 s,
+    # identical labels and schema).
+    kws = ", ".join(_sql_str(k) for k in sorted(set(keywords.values())))
     tokd = (
-        feats.withColumn(
-            "_toks",
-            F.filter(F.split(F.lower("feature_text"), " "),
-                     lambda x: x.isin(*kws)))
+        feats.withColumn("_toks", F.expr(
+            f"filter(split(lower(feature_text), ' '), x -> x IN ({kws}))"))
         .withColumn("_nocollapse", F.monotonically_increasing_id())
     )
-    structs = []
-    for cat, kw in sorted(keywords.items()):
-        cnt = (F.size(F.col("_toks"))
-               - F.size(F.array_remove(F.col("_toks"), kw)))
-        structs.append(F.struct((-cnt).alias("neg"),
-                                F.lit(cat).alias("category")))
-    best = F.array_min(F.array(*structs))
+    terms = ", ".join(
+        f"named_struct('neg', size(array_remove(_toks, {_sql_str(kw)}))"
+        f" - size(_toks), 'category', {_sql_str(cat)})"
+        for cat, kw in sorted(keywords.items()))
     return (
-        tokd.withColumn("pred_label", best["category"])
-        .withColumn("pred_score", (-best["neg"]).cast("long"))
-        .drop("_toks", "_nocollapse")
+        tokd.withColumn("_best", F.expr(f"array_min(array({terms}))"))
+        .withColumn("pred_label", F.col("_best.category"))
+        .withColumn("pred_score", (-F.col("_best.neg")).cast("long"))
+        .drop("_toks", "_nocollapse", "_best")
     )
+
+
+def _sql_str(s: str) -> str:
+    """A SQL string literal for s."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _score_features(feats: DataFrame, keywords: Dict[str, str]) -> DataFrame:

@@ -56,7 +56,7 @@ def acceptance_decisions(
     per mention_id): accepted_qid, accepted_lang, wikidata_summary,
     wikidata_arguments, arg_pairs, wikipedia_title, wikipedia_summary.
 
-    Split out from accept_and_enrich so callers can materialize it
+    Kept apart from the terminal attach so callers can materialize it
     before the fold-back join — the fused decision+join plan degrades
     ~3× at high parallelism (same pathology as the linking stage, see
     pipeline.py)."""
@@ -149,24 +149,6 @@ def acceptance_decisions(
     return with_summary
 
 
-def attach_decisions(linked: DataFrame, decisions: DataFrame) -> DataFrame:
-    """Fold the per-mention decision frame back onto the mention rows;
-    mentions with no accepted candidate get the Q0 link sentinel.
-
-    The decisions side carries long summary strings, so its parquet
-    footprint wildly underestimates its in-memory size: Spark's static
-    planner saw an ~8 MB file at 1.2M turns and chose a broadcast join
-    whose driver-side build was a measured 12.7 s serial stall (the
-    single largest gap in the N→4N event logs, BENCH/BASELINE.md). A
-    shuffled hash join is forced instead — per-mention rows stream
-    through executors with no driver collect, the exact shape a
-    10¹²-turn run needs (where decisions could never broadcast)."""
-    return linked.join(decisions.hint("shuffle_hash"), "mention_id",
-                       "left").withColumn(
-        "link_qid", F.coalesce("accepted_qid", F.lit(Q0))
-    )
-
-
 def attach_predictions_and_decisions(mentions: DataFrame,
                                      predictions: DataFrame,
                                      decisions: DataFrame) -> DataFrame:
@@ -178,25 +160,25 @@ def attach_predictions_and_decisions(mentions: DataFrame,
     decisions attach) with a ~150 MB-at-sf1.0 stage-cut materialization
     in between.
 
-    Equivalence with attach_decisions(predictions_per_mention(...), ...):
-    a mention absent from `predictions` had zero surviving candidates;
-    in the r6 shape its ["Q0"] sentinel rode INTO acceptance_decisions,
-    where Q0 (never in kb_context) produced exactly the constant
-    decision row (acc NULL → sentinel summaries/titles, empty argument
-    arrays). Those constants are re-added here via coalesce, so feeding
+    A mention absent from `predictions` had zero surviving candidates.
+    Its decision row is the constant one a ["Q0"] prediction yields
+    (Q0 is never in kb_context: acc NULL → sentinel summaries/titles,
+    empty argument arrays), re-added here via coalesce, so feeding
     acceptance_decisions the slim frame (which simply lacks those
-    mentions) yields an identical enriched table — row-for-row
-    (equivalence pytest + q25 oracle hash).
+    mentions) gives the same enriched table (sentinel pytest + q25
+    oracle hash).
 
-    Both small sides take the shuffle_hash hint for the
-    attach_decisions reason (the decisions/prediction builds must not
-    be driver-broadcast at corpus scale; per-mention rows stream).
+    Both small sides take the shuffle_hash hint: the decisions side
+    carries long summary strings, so its parquet footprint wildly
+    underestimates its in-memory size — Spark's static planner once
+    chose a driver broadcast of an ~8 MB file at 1.2M turns, a measured
+    12.7 s serial stall (BENCH/BASELINE.md). Per-mention rows stream
+    through executors instead, with no driver collect.
 
     The sentinel literals ride inside when(true, …) so the coalesced
-    columns stay NULLABLE — bit-identical schema (not just values) to
-    the r6 shape, whose decision columns came out of a left join."""
-    def _n(c):  # keep nullable=True like the r6 left-join columns
-        # (schema-identical, not just value-identical). A foldable
+    columns stay NULLABLE, like the left-joined decision columns of
+    the mentions that do have predictions."""
+    def _n(c):  # keep nullable=True like the left-join columns. A foldable
         # always-true guard gets simplified away by the analyzer, so
         # the condition references a non-null column: length() of a
         # concat_ws is ≥ 0 on every row, the branch always fires, and
@@ -227,21 +209,4 @@ def attach_predictions_and_decisions(mentions: DataFrame,
                     F.coalesce("wikipedia_summary",
                                _n(F.lit(NO_WIKIPEDIA_SUMMARY))))
         .withColumn("link_qid", F.coalesce("accepted_qid", F.lit(Q0)))
-    )
-
-
-def accept_and_enrich(
-    linked: DataFrame,
-    kb_context: DataFrame,
-    wiki_summaries: DataFrame,
-    language: str = "en",
-    summaries_dim: DataFrame | None = None,
-) -> DataFrame:
-    """linked(mention_id, genre_prediction, ...) → + (link_qid,
-    accepted_qid, accepted_lang, wikidata_summary, wikidata_arguments,
-    wikipedia_title, wikipedia_summary). Composition of
-    acceptance_decisions + attach_decisions."""
-    return attach_decisions(
-        linked, acceptance_decisions(linked, kb_context, wiki_summaries,
-                                     language, summaries_dim=summaries_dim)
     )

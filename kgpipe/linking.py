@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kgpipe.kb import qid_num
-from kgpipe.schemas import Q0
 
 MARGINALIZE_LENPEN = 0.5  # fairseq_model.py:27 default
 DEFAULT_BEAM = 8  # run_genre.py:227
@@ -195,7 +194,7 @@ def marginalize(hypotheses: DataFrame,
 
     details=False is the PIPELINE shape: the per-QID hypothesis
     texts/scores arrays are diagnostics nobody downstream of linking
-    consumes (predictions_per_mention folds only (rank, qid)), yet with
+    consumes (predictions_frame folds only (rank, qid)), yet with
     details=True they ride the collect_list structs, the rank-window
     sort and the fold-back shuffle — measured ~300 extra bytes/row
     through the three heaviest spill stages of the 1.2M-turn scaling
@@ -246,8 +245,9 @@ def marginalize(hypotheses: DataFrame,
 def predictions_frame(ranked: DataFrame) -> DataFrame:
     """The slim (mention_id, genre_prediction) fold of the ranked QIDs:
     genre_prediction = [qid by rank asc]. Mentions with zero surviving
-    candidates are ABSENT here (predictions_per_mention's left join +
-    coalesce adds their ["Q0"] sentinel). Split out in r7 so the
+    candidates are ABSENT here (enrich.attach_predictions_and_decisions
+    gives them the ["Q0"] sentinel, the terminal rung of the
+    reference's error ladder, run_genre.py:296-364). Split out in r7 so the
     pipeline can cut/materialize THIS frame (~10 B/mention) instead of
     the wide fold-back join output (~300+ B/mention with marked_text):
     the decision stage consumes only these two columns, so the wide
@@ -258,66 +258,3 @@ def predictions_frame(ranked: DataFrame) -> DataFrame:
             "transform(array_sort(collect_list(struct(rank, qid))), x -> x.qid)"
         ).alias("genre_prediction")
     )
-
-
-def predictions_per_mention(mentions: DataFrame, ranked: DataFrame) -> DataFrame:
-    """Fold ranked QIDs back to one row per mention:
-    genre_prediction = [qid by rank asc]; mentions with zero surviving
-    candidates get the ["Q0"] sentinel — the terminal rung of the
-    reference's error ladder (run_genre.py:296-364)."""
-    # join strategy note: a shuffle_hash hint on the per_mention build
-    # side (to avoid sorting the wide mention stream) measurably raised
-    # GC on 2g executors (hash build of prediction arrays) without
-    # lowering spill — unlike enrich.attach_decisions, where the hint
-    # replaces a catastrophic driver BROADCAST, not a Tungsten sort.
-    # Keep the planner default here.
-    return (
-        mentions.join(predictions_frame(ranked), "mention_id", "left")
-        .withColumn(
-            "genre_prediction",
-            F.coalesce("genre_prediction", F.array(F.lit(Q0))),
-        )
-    )
-
-
-def link_mentions(mentions: DataFrame, candidates: DataFrame,
-                  title_map: DataFrame, beam: int = DEFAULT_BEAM,
-                  lenpen: float = MARGINALIZE_LENPEN) -> DataFrame:
-    """Full linking stage: candidates → scored hypotheses → marginalize
-    → ranked predictions folded back onto mentions. Marginalization runs
-    slim (details=False): this composition consumes only (rank, qid)."""
-    hyps = score_hypotheses(candidates, mentions, title_map, beam=beam)
-    ranked = marginalize(hyps, lenpen=lenpen, details=False)
-    return predictions_per_mention(mentions, ranked)
-
-
-def link_mentions_fast(mentions: DataFrame, mention_counts: DataFrame,
-                       title_map: DataFrame, beam: int = DEFAULT_BEAM,
-                       lenpen: float = MARGINALIZE_LENPEN,
-                       max_candidates: int = 8) -> DataFrame:
-    """Single-shuffle linking variant: repartition the mention stream
-    ONCE on its unique mention_id; candidate attachment (broadcast
-    array probe), hypothesis explode+broadcast-title join, beam-cap
-    window, per-QID marginalization, rank window and fold-back join
-    are all satisfied by hash(mention_id) — no further exchanges.
-    Identical output to generate_candidates+link_mentions.
-
-    MEASURED CAVEAT: despite the minimal shuffle count, this is ~7×
-    slower than the row-based path on local[8] — the interpreted
-    higher-order array expressions in attach_candidates dominate and
-    get re-inlined per downstream consumer. Kept as the
-    shuffle-minimal reference plan (it wins only when shuffle IO, not
-    CPU, is the bottleneck); the pipeline uses the row-based path.
-    """
-    from kgpipe.candidates import attach_candidates
-
-    m_r = mentions.repartition("mention_id")
-    with_cands = attach_candidates(m_r, mention_counts,
-                                   max_candidates=max_candidates)
-    cand_rows = with_cands.select(
-        "mention_id", F.explode("candidates").alias("c")
-    ).select("mention_id", F.col("c.qid").alias("qid"),
-             F.col("c.cnt").alias("cnt"))
-    hyps = score_hypotheses(cand_rows, m_r, title_map, beam=beam)
-    ranked = marginalize(hyps, lenpen=lenpen, details=False)
-    return predictions_per_mention(m_r, ranked)

@@ -5,8 +5,10 @@ gazetteer tag → Q1 spans → Q2 marking → J5 candidates → scoring +
 A1 marginalization → J7 acceptance + J6 enrichment → classification →
 (subj, pred, obj) triples.
 
-Every stage takes/returns DataFrames; `run_pipeline` optionally
-checkpoints each stage for idempotent resume (checkpoints.py).
+Every stage takes/returns DataFrames. `run_pipeline` is ONE stage
+graph; only the materialization of its cut points varies: local
+checkpoint, parquet, or — with a checkpoint_dir — resumable commits of
+the `mentions`, `linked` and `enriched` stages (checkpoints.py).
 """
 
 from __future__ import annotations
@@ -17,14 +19,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgpipe import checkpoints
-from kgpipe.candidates import attach_candidates, generate_candidates  # noqa: F401
+from kgpipe.candidates import generate_candidates
 from kgpipe.classify import classify
-from kgpipe.enrich import accept_and_enrich
 from kgpipe.kb import build_alias_map, build_kb_context, build_title_map
-from kgpipe.linking import link_mentions, link_mentions_fast  # noqa: F401
-from kgpipe.mentions import (  # noqa: F401
-    assert_text_equality, detect_mentions, detect_mentions_join, tokenize,
-    with_turn_order,
+from kgpipe.mentions import (
+    assert_text_equality, detect_mentions_join, tokenize, with_turn_order,
 )
 from kgpipe.triples import emit_triples
 
@@ -67,14 +66,6 @@ def surfaces_df_from_dims(alias_map: DataFrame,
     a = alias_map.select(F.col("alias_lc").alias("surface"))
     b = mention_counts.select(F.col("mention").alias("surface"))
     return a.unionByName(b).distinct()
-
-
-def surfaces_from_dims(alias_map: DataFrame, mention_counts: DataFrame) -> list:
-    """Collected form of surfaces_df_from_dims — ONLY for fixture-scale
-    gazetteers (tests, the pandas-UDF tagger). The pipeline itself never
-    calls this; use surfaces_df_from_dims at KB scale."""
-    return [r["surface"]
-            for r in surfaces_df_from_dims(alias_map, mention_counts).collect()]
 
 
 def build_dims(spark: SparkSession, entity_kb: DataFrame, kb_args: DataFrame,
@@ -170,241 +161,214 @@ def run_pipeline(
     skip_cuts: tuple = SINGLE_CONSUMER_CUTS,
     canonical_map: DataFrame | None = None,
 ) -> dict:
-    """Returns dict of stage DataFrames: turns, mentions, candidates,
-    linked, enriched, classified, triples. Pass `dims` (from
-    build_dims) to reuse prebuilt KB lookups across runs.
+    """Returns dict of stage DataFrames: turns, mentions, linked (the
+    slim (mention_id, genre_prediction) frame), enriched, classified,
+    triples. Pass `dims` (from build_dims) to reuse prebuilt KB lookups
+    across runs.
 
-    cut_mode (non-checkpoint path only): how stage boundaries are
-    materialized — "local" (default: localCheckpoint truncates lineage
-    without a parquet roundtrip; measured ~25% faster), "parquet"
-    (write+read — the durable-table shape; what checkpoint_dir mode
-    always uses), "none" (fully fused — measurement baseline only).
-    skip_cuts: stage names to fuse through regardless of mode.
+    checkpoint_dir: commit the three durable cut points — mentions,
+    linked, enriched — as append-only segments under
+    <checkpoint_dir>/<stage> and compute only what is pending: the
+    conversations no earlier run processed, and the upstream segments a
+    stage has not consumed (checkpoints.resume_stage). Everything after
+    the enriched commit stays lazy, so a caller that only wants the
+    commits pays nothing for classification.
+    cut_mode: how the other stage boundaries (and, without a
+    checkpoint_dir, the durable ones) are materialized — "local"
+    (default: localCheckpoint truncates lineage without a parquet
+    roundtrip; measured ~25% faster), "parquet" (write+read under
+    work_dir), "none" (fully fused — measurement baseline only).
+    skip_cuts: non-durable stage names to fuse through regardless of
+    mode.
     canonical_map: optional (qid, canonical_qid) frame (e.g. from
     canonical.canonicalize_qids over redirect_equivalence_edges) —
     applied to the accepted/link QIDs after enrichment, BEFORE
     classification features are consumed and triples are emitted
     (north_rule canonicalization step). Broadcast joins, no shuffle."""
-    # deferred dims (non-checkpoint path): build_dims resolves only the
-    # surface dim and leaves the other checkpoint jobs in flight, so
-    # the mention stage below overlaps them; _dim() blocks on a still-
-    # running future only when a later stage actually needs that dim.
+    # deferred dims: build_dims resolves only the surface dim and leaves
+    # the other checkpoint jobs in flight, so the mention stage below
+    # overlaps them; _dim() blocks on a still-running future only when
+    # a later stage actually needs that dim.
     dims = dims or build_dims(spark, entity_kb, kb_args, mention_counts,
-                              wiki_summaries=wiki_summaries,
-                              deferred=not checkpoint_dir)
+                              wiki_summaries=wiki_summaries, deferred=True)
 
     def _dim(name):
         v = dims.get(name)
         return v.result() if hasattr(v, "result") else v
 
     surfaces_df = _dim("surfaces_df")
-    if surfaces_df is None:  # legacy dims dict with a collected list
-        surfaces_df = spark.createDataFrame(
-            [(s,) for s in dims["surfaces"]], "surface string")
 
     turns = tokenize(with_turn_order(transcripts))
     if check_invariants:
         assert_text_equality(turns)
 
-    def stage_mentions(t: DataFrame) -> DataFrame:
-        # broadcast-JOIN tagger: the surface dim never hits the driver;
-        # the broadcast decision comes from build_dims' Observation when
-        # available (None → the tagger probes with one extra job)
-        return detect_mentions_join(
-            t, surfaces_df, broadcast_dim=dims.get("surfaces_broadcastable"))
+    from kgpipe.io import read_table, write_table
 
-    def stage_link(m: DataFrame) -> DataFrame:
-        # row-based operators (broadcast joins + windows): with stage
-        # cuts in place this measured 7× faster than the all-array
-        # variant (link_mentions_fast) — Spark's interpreted
-        # higher-order-function expressions get re-inlined per consumer
-        # by project collapsing, while joins/windows stay in codegen
-        cands = generate_candidates(m, mention_counts,
-                                    max_candidates=max_candidates)
-        return link_mentions(m, cands, _dim("title_map"), beam=beam)
-
-    def stage_enrich(l: DataFrame) -> DataFrame:
-        return accept_and_enrich(l, _dim("kb_context"), wiki_summaries,
-                                 language=language,
-                                 summaries_dim=_dim("summaries_dim"))
-
-    if checkpoint_dir:
-        mentions = checkpoints.resume_stage(
-            turns.withColumn(
-                "mention_id", F.concat_ws("/", "conv_id", "turn_idx")
-            ).drop("mention_id"),
-            os.path.join(checkpoint_dir, "mentions"), "mentions", stage_mentions,
-            key="conv_id",
-        )
-        linked = checkpoints.resume_stage(
-            mentions, os.path.join(checkpoint_dir, "linked"), "linked", stage_link
-        )
-        enriched = checkpoints.resume_stage(
-            linked, os.path.join(checkpoint_dir, "enriched"), "enriched", stage_enrich
-        )
-    else:
-        # Materialize each stage boundary (a lightweight stage cut, no
-        # resume bookkeeping). Measured far faster than any lazy/persist
-        # variant: every stage output is referenced by 2-3 downstream
+    def cut(df: DataFrame, name: str) -> DataFrame:
+        # Materialize a stage boundary. Measured far faster than any
+        # lazy/persist variant: most stage outputs have 2-3 downstream
         # consumers (candidate probe, hypothesis context, fold-back
         # join, triple branches) and Catalyst's project collapsing
         # otherwise re-inlines the expensive candidate/hypothesis
         # expressions per consumer; a fused linking mega-stage also
         # degrades at high parallelism (per-task memory shrinks with
-        # concurrency at fixed heap). Default cut is localCheckpoint
-        # (~25% faster than parquet write+read); the production design
-        # uses durable stage tables (checkpoint_dir path adds resume +
-        # lineage; cut_mode="parquet" gives the same shape here).
-        import tempfile
+        # concurrency at fixed heap).
+        nonlocal work_dir
+        if name in skip_cuts or cut_mode == "none":
+            return df
+        # label the cut's job so UI/eventlog time attributes to the
+        # stage by name (guide §1.5); thread-local, reset after
+        spark.sparkContext.setJobDescription(f"kgpipe cut:{name}")
+        try:
+            if cut_mode == "local":
+                return df.localCheckpoint(eager=True)
+            if work_dir is None:
+                import tempfile
 
-        work_dir = work_dir or tempfile.mkdtemp(prefix="kgpipe-stages-")
+                work_dir = tempfile.mkdtemp(prefix="kgpipe-stages-")
+            path = os.path.join(work_dir, name)
+            write_table(df, path)
+            return read_table(spark, path)
+        finally:
+            spark.sparkContext.setJobDescription(None)
 
-        from kgpipe.io import read_table, write_table
+    def stage_path(name: str) -> str:
+        return os.path.join(checkpoint_dir, name)
 
-        def cut(df: DataFrame, name: str) -> DataFrame:
-            if name in skip_cuts or cut_mode == "none":
-                return df
-            # label the cut's job so UI/eventlog time attributes to the
-            # stage by name (guide §1.5); thread-local, reset after
-            spark.sparkContext.setJobDescription(f"kgpipe cut:{name}")
-            try:
-                if cut_mode == "local":
-                    return df.localCheckpoint(eager=True)
-                path = os.path.join(work_dir, name)
-                write_table(df, path)
-                return read_table(spark, path)
-            finally:
-                spark.sparkContext.setJobDescription(None)
+    stages = {}
 
-        # r7 turn-level tokens: the mention cut used to materialize the
-        # turn's ~100-string token array PER MENTION (~9 mentions/turn
-        # at bench scale → the array stored 9×, the dominant bytes of
-        # the stage and of executor storage). Tokens now stay on a
-        # turn-level cut (one array per turn); the mention cut drops
-        # them, and the hypothesis stage re-attaches them with one
-        # narrow join on (conv_id, turn_idx) that is fused into its
-        # first stage. The turns cut also dedupes the tagger's two
-        # internal scans of the turn frame (candidate explode + final
-        # span join read the same checkpoint instead of recomputing
-        # scan+order-window twice).
-        # fan-out statistic for the candidate-path choice below,
-        # computed CONCURRENTLY with the turn/mention cuts (one tiny
-        # dim aggregation; the thread overlaps its job with the stage
-        # jobs exactly like build_dims' deferred checkpoints)
-        from concurrent.futures import ThreadPoolExecutor
+    def durable(name: str, compute, source, key: str | None = None):
+        """The three durable cut points. `source` is the input frame,
+        resumed against `key`, or the name of the upstream durable
+        stage. With a checkpoint_dir: a resumable commit — pending =
+        source anti-joined on `key`, or the upstream stage's unconsumed
+        segments. Otherwise: a plain cut of compute(source)."""
+        upstream = isinstance(source, str)
+        if checkpoint_dir:
+            work = stage_path(source) if upstream else source
+            stages[name] = checkpoints.resume_stage(
+                work, stage_path(name), name, compute, key=key)
+        else:
+            stages[name] = cut(compute(stages[source] if upstream
+                                       else source), name)
+        return stages[name]
 
-        def _max_fanout():
-            row = (mention_counts.groupBy("mention")
-                   .agg(F.count(F.lit(1)).alias("n"))
-                   .agg(F.max("n")).collect())
-            return (row[0][0] if row else 0) or 0
+    # fan-out statistic for the candidate-path choice in link(),
+    # computed CONCURRENTLY with the turn/mention cuts (one tiny dim
+    # aggregation; the thread overlaps its job with the stage jobs
+    # exactly like build_dims' deferred checkpoints)
+    from concurrent.futures import ThreadPoolExecutor
 
-        _fanout_pool = ThreadPoolExecutor(max_workers=1)
-        fanout_future = _fanout_pool.submit(_max_fanout)
-        _fanout_pool.shutdown(wait=False)
+    def _max_fanout():
+        row = (mention_counts.groupBy("mention")
+               .agg(F.count(F.lit(1)).alias("n"))
+               .agg(F.max("n")).collect())
+        return (row[0][0] if row else 0) or 0
 
-        # the tagger and the hypothesis token join consume ONLY
-        # (conv_id, turn_idx, tokens): mention text/marked_text are
-        # token-slice reconstructions, so the raw text column never
-        # needs to ride the cut
-        turns_cut = cut(
-            turns.select("conv_id", "turn_idx", "tokens"), "turns")
-        mentions = cut(stage_mentions(turns_cut).drop("tokens"), "mentions")
-        # Linking sub-steps: candidates/hypotheses/ranked are single-
-        # consumer and fuse by default (SINGLE_CONSUMER_CUTS above).
-        # The historical anti-scaling of the fused plan (18s@8 →
-        # 166s@32 on 90k turns, r1) was root-caused in r2 to the
-        # closure-captured pandas-UDF tagger, not to fusion; with the
-        # broadcast-join tagger the fused plan is faster at every
-        # measured parallelism and saves ~10 driver jobs per run.
-        from kgpipe.linking import (
-            marginalize, predictions_frame, score_hypotheses,
-        )
+    _fanout_pool = ThreadPoolExecutor(max_workers=1)
+    fanout_future = _fanout_pool.submit(_max_fanout)
+    _fanout_pool.shutdown(wait=False)
 
+    turns_cut = None
+
+    def tag(t: DataFrame) -> DataFrame:
+        # raw transcripts → token-free mention rows. Tokens stay on a
+        # turn-level cut (one array per turn, r7): the mention rows
+        # drop them and link() re-attaches them with one narrow join on
+        # (conv_id, turn_idx). The cut also dedupes the tagger's two
+        # internal scans of the turn frame. The tagger and that join
+        # consume ONLY (conv_id, turn_idx, tokens): mention text and
+        # marked_text are token-slice reconstructions. The broadcast-
+        # JOIN tagger keeps the surface dim off the driver; its
+        # broadcast decision comes from build_dims' Observation.
+        nonlocal turns_cut
+        turns_cut = cut(tokenize(with_turn_order(t))
+                        .select("conv_id", "turn_idx", "tokens"), "turns")
+        return detect_mentions_join(
+            turns_cut, surfaces_df,
+            broadcast_dim=dims.get("surfaces_broadcastable")).drop("tokens")
+
+    # Mention segments a crashed run committed without their linked
+    # segment: their tokens are not in this run's turn cut, so link()
+    # re-tokenizes from all turns — the only case that pays extra.
+    leftover = bool(checkpoint_dir) and bool(checkpoints.pending_segments(
+        stage_path("linked"), stage_path("mentions")))
+    # the unit of resume is the conversation, anti-joined ONCE on the
+    # raw transcripts (below with_turn_order)
+    mentions = durable("mentions", tag, transcripts, key="conv_id")
+    tokens = (turns.select("conv_id", "turn_idx", "tokens") if leftover
+              else turns_cut)
+
+    from kgpipe.linking import (
+        marginalize, predictions_frame, score_hypotheses,
+        score_hypotheses_inrow,
+    )
+
+    def link(m: DataFrame) -> DataFrame:
         # planner-default join (SMJ at scale) — NO shuffle_hash hint:
         # hash-building a partition's worth of turn TOKEN ARRAYS
-        # re-creates exactly the tight-heap pathology the
-        # score_hypotheses join-strategy note documents (hash builds of
-        # token arrays raised JVM GC ~6× on 2g executors while the
-        # Tungsten SMJ sort spills compressed and GC-free). Measured
-        # here too: with the hint a 2g/2-core standalone leg ground
-        # >30 min inside this stage where the whole r6 leg ran ~11 min.
-        m_tok = mentions.join(
-            turns_cut.select("conv_id", "turn_idx", "tokens"),
-            ["conv_id", "turn_idx"])
+        # re-creates the tight-heap pathology the score_hypotheses
+        # join-strategy note documents (measured: with the hint a
+        # 2g/2-core standalone leg ground >30 min inside this stage).
+        m_tok = m.join(tokens, ["conv_id", "turn_idx"])
         # Candidate-path choice is DATA-ADAPTIVE on the dictionary's
-        # fan-out (max QIDs per surface — one tiny aggregation over the
-        # dim, the same class of statistic a broadcast threshold uses):
-        #
+        # fan-out (max QIDs per surface):
         # - small fan-out (≤ IN_ROW_MAX_FANOUT): the in-row path
-        #   (attach_candidates merge + on-row scoring,
-        #   score_hypotheses_inrow) — zero exchanges before the beam
-        #   window; measured ~1.5 s faster per sf1.0 run at the bench
-        #   lexicon's fan-out of 1.
+        #   (attach_candidates merge + on-row scoring) — zero exchanges
+        #   before the beam window; measured ~1.5 s faster per sf1.0
+        #   run at the bench lexicon's fan-out of 1.
         # - larger fan-out: the JOIN/groupBy/window composition (every
-        #   operator whole-stage-codegen'd). The in-row per-row
-        #   higher-order expressions are INTERPRETED and their cost
-        #   scales with fan-out k: at the scaling fixture's 84
-        #   qids/surface (k≈168 entries after the two probes) the
-        #   original O(k²) merge ground a 2-core standalone leg
-        #   indefinitely (jstack: ArrayFilter inside ArrayAggregate),
-        #   and even the linear merge — interpreted sort-comparator
-        #   lambdas, ~k·log k evals/mention — blew past a 10-minute
+        #   operator codegen'd). The in-row higher-order expressions
+        #   are INTERPRETED and their cost scales with fan-out: at 84
+        #   qids/surface even the linear merge blew past a 10-minute
         #   local[8] budget on 1.2M turns where this join shape
-        #   finishes the whole pipeline in 232 s. Parallelism and
-        #   codegen must come from the plan, not from per-row array
-        #   programming (guide §2.5, §4).
-        fanout = fanout_future.result()
-        if fanout <= IN_ROW_MAX_FANOUT:
-            from kgpipe.linking import score_hypotheses_inrow
-
-            hyps = cut(score_hypotheses_inrow(
+        #   finishes the whole pipeline in 232 s (guide §2.5, §4).
+        # candidates/hypotheses/ranked are single-consumer and fuse by
+        # default (SINGLE_CONSUMER_CUTS).
+        if fanout_future.result() <= IN_ROW_MAX_FANOUT:
+            hyps = score_hypotheses_inrow(
                 m_tok, mention_counts, _dim("title_map"),
-                beam=beam, max_candidates=max_candidates), "hypotheses")
+                beam=beam, max_candidates=max_candidates)
         else:
-            cands = generate_candidates(mentions, mention_counts,
+            cands = generate_candidates(m, mention_counts,
                                         max_candidates=max_candidates)
-            hyps = cut(score_hypotheses(cands, m_tok, _dim("title_map"),
-                                        beam=beam), "hypotheses")
-        # details=False: texts/scores are per-QID diagnostics nothing in
-        # this pipeline reads; slim rows through the marginalize agg,
-        # the rank window and the fold-back join (score bit-identical)
-        ranked = cut(marginalize(hyps, details=False), "ranked")
-        # r7 slim fold-back: cut the (mention_id, genre_prediction)
-        # frame, NOT the wide fold-back join output. The r6 shape
-        # materialized `linked` (mention rows + predictions, ~150 MB at
-        # sf1.0 with marked_text riding every row) and then shuffled it
-        # AGAIN into the decisions attach — the wide rows crossed two
-        # exchanges plus a checkpoint. The decision stage only reads
-        # (mention_id, genre_prediction), so it now consumes the slim
-        # cut directly and the wide mention rows cross ONE exchange, in
-        # the terminal attach (guide §2.3 "project before the
-        # exchange"; equivalence: enrich.attach_predictions_and_decisions).
-        preds = cut(predictions_frame(ranked), "predictions")
-        # decision aggregation still cut before the terminal attach
-        # (fused, it degrades ~3× at 32 cores)
-        from kgpipe.enrich import (
-            acceptance_decisions, attach_predictions_and_decisions,
-        )
+            hyps = score_hypotheses(cands, m_tok, _dim("title_map"),
+                                    beam=beam)
+        # details=False: texts/scores are per-QID diagnostics nothing
+        # here reads; slim rows through the marginalize agg, the rank
+        # window and the fold
+        ranked = cut(marginalize(cut(hyps, "hypotheses"), details=False),
+                     "ranked")
+        # r7 slim fold: the durable cut is (mention_id, genre_prediction),
+        # not the wide mention rows — the decision stage reads only
+        # these two columns, so the wide rows cross ONE exchange, in
+        # the terminal attach (guide §2.3 "project before the exchange")
+        return predictions_frame(ranked)
 
+    linked = durable("linked", link, "mentions")
+
+    from kgpipe.enrich import (
+        acceptance_decisions, attach_predictions_and_decisions,
+    )
+
+    def enrich(preds: DataFrame) -> DataFrame:
+        # the mention rows the pending predictions were computed from:
+        # on resume, the mention segments behind the unconsumed linked
+        # segments (manifest lineage, no Spark job)
+        m = (checkpoints.lineage_rows(spark, stage_path("enriched"),
+                                      stage_path("linked"),
+                                      stage_path("mentions"))
+             if checkpoint_dir else mentions)
+        # decision aggregation cut before the terminal attach (fused,
+        # it degrades ~3× at 32 cores)
         decisions = cut(
             acceptance_decisions(preds, _dim("kb_context"), wiki_summaries,
                                  language=language,
                                  summaries_dim=_dim("summaries_dim")),
-            "decisions",
-        )
-        # mentions is already token-free (turn-level tokens cut above),
-        # so the terminal attach ships no token arrays
-        enriched = cut(attach_predictions_and_decisions(
-            mentions, preds, decisions), "enriched")
-        # lazy compat frame for result-dict consumers (smoke scripts);
-        # costs nothing unless evaluated
-        linked = enriched.select(
-            *[c for c in enriched.columns
-              if c not in ("accepted_qid", "accepted_lang",
-                           "wikidata_summary", "wikidata_arguments",
-                           "arg_pairs", "wikipedia_title",
-                           "wikipedia_summary", "link_qid")])
+            "decisions")
+        return attach_predictions_and_decisions(m, preds, decisions)
+
+    enriched = durable("enriched", enrich, "linked")
 
     if canonical_map is not None:
         from kgpipe.canonical import apply_canonicalization
@@ -418,15 +382,15 @@ def run_pipeline(
         classified = classify_ensemble(enriched, n_variants=ensemble_seeds)
     else:
         classified = classify(enriched)
-    if not checkpoint_dir:
+    # if the classified frame is materialized (parquet/localCheckpoint)
+    # the two triple branches read it cheaply; otherwise let
+    # emit_triples persist its slim projection. With a checkpoint_dir
+    # nothing after the enriched commit runs until the caller asks.
+    was_cut = not (checkpoint_dir or cut_mode == "none"
+                   or "classified" in skip_cuts)
+    if was_cut:
         classified = cut(classified, "classified")
-        was_cut = cut_mode != "none" and "classified" not in skip_cuts
-        # if the classified frame is materialized (parquet/localCheckpoint)
-        # the two triple branches read it cheaply; otherwise let
-        # emit_triples persist its slim projection
-        triples = emit_triples(classified, materialize=not was_cut)
-    else:
-        triples = emit_triples(classified)
+    triples = emit_triples(classified, materialize=not was_cut)
     return {
         "turns": turns,
         "mentions": mentions,

@@ -26,7 +26,7 @@ m.select("mention_id", "text", "start", "end", "marked_text").show(8, truncate=7
 
 linked = res["linked"].cache()
 print("linked:", linked.count())
-linked.select("mention_id", "text", "genre_prediction").show(8, truncate=70)
+linked.select("mention_id", "genre_prediction").show(8, truncate=70)
 
 enr = res["enriched"].cache()
 print("enriched:", enr.count())

@@ -8,7 +8,9 @@ from pyspark.sql import functions as F
 from kgpipe import schemas
 from kgpipe.candidates import generate_candidates
 from kgpipe.classify import majority_vote
-from kgpipe.enrich import accept_and_enrich
+from kgpipe.enrich import (
+    acceptance_decisions, attach_predictions_and_decisions,
+)
 from kgpipe.kb import build_kb_context
 from kgpipe.linking import marginalize
 
@@ -78,6 +80,14 @@ def _enrich_fixture(spark):
     return ctx, summaries
 
 
+def _enrich(linked, ctx, summaries, language):
+    """The pipeline's enrichment composition over a slim
+    (mention_id, genre_prediction) frame: one enriched row per mention."""
+    return attach_predictions_and_decisions(
+        linked.select("mention_id"), linked,
+        acceptance_decisions(linked, ctx, summaries, language))
+
+
 def test_acceptance_rank_order_and_disambig_skip(spark):
     ctx, summaries = _enrich_fixture(spark)
     linked = spark.createDataFrame(
@@ -87,7 +97,7 @@ def test_acceptance_rank_order_and_disambig_skip(spark):
         "mention_id string, genre_prediction array<string>",
     )
     out = {r["mention_id"]: r
-           for r in accept_and_enrich(linked, ctx, summaries, "en").collect()}
+           for r in _enrich(linked, ctx, summaries, "en").collect()}
     m1 = out["m1"]
     assert m1["link_qid"] == "Q1" and m1["accepted_lang"] == "en"
     assert m1["wikidata_summary"] == "politician d"
@@ -111,7 +121,7 @@ def test_acceptance_en_fallback(spark):
         "mention_id string, genre_prediction array<string>",
     )
     out = {r["mention_id"]: r
-           for r in accept_and_enrich(linked, ctx, summaries, "de").collect()}
+           for r in _enrich(linked, ctx, summaries, "de").collect()}
     # Q1 has de coverage → accepted in de, arguments use de labels
     m1 = out["m1"]
     assert m1["accepted_lang"] == "de" and m1["wikidata_summary"] == "pol d"
@@ -126,7 +136,7 @@ def test_en_fallback_when_requested_lang_uncovered(spark):
         [("m1", ["Q1"])], "mention_id string, genre_prediction array<string>"
     )
     # fr never covered; Q1 has en → EN fallback (get_wikidata.py:192-201)
-    out = accept_and_enrich(linked, ctx, summaries, "fr").collect()[0]
+    out = _enrich(linked, ctx, summaries, "fr").collect()[0]
     assert out["accepted_lang"] == "en" and out["link_qid"] == "Q1"
 
 
@@ -177,18 +187,13 @@ def test_score_hypotheses_inrow_equivalence(spark):
 
 
 def test_slim_foldback_equivalence(spark):
-    """r7 slim fold-back (predictions_frame cut + terminal
-    attach_predictions_and_decisions) is row-identical — schema order
-    included — to the r6 composition (wide predictions_per_mention →
-    acceptance_decisions → attach_decisions), INCLUDING the
-    zero-candidate sentinel path (m0 below never reaches `ranked`, so
-    the slim path must reconstruct the constant decision row that the
-    r6 path derived from the exploded ["Q0"] sentinel)."""
-    from kgpipe.enrich import (
-        acceptance_decisions, attach_decisions,
-        attach_predictions_and_decisions,
-    )
-    from kgpipe.linking import predictions_frame, predictions_per_mention
+    """The slim fold-back (predictions_frame + terminal
+    attach_predictions_and_decisions) is row-identical to feeding the
+    decision stage the ["Q0"]-sentinel rows explicitly, INCLUDING the
+    zero-candidate path: m0 never reaches `ranked`, so the attach must
+    reconstruct the constant decision row the sentinel would have
+    produced, and keep the decision columns nullable."""
+    from kgpipe.linking import predictions_frame
 
     ctx, summaries = _enrich_fixture(spark)
     mentions = spark.createDataFrame(
@@ -200,16 +205,20 @@ def test_slim_foldback_equivalence(spark):
         "mention_id string, qid string, score double, rank int",
     )
 
-    old_linked = predictions_per_mention(mentions, ranked)
-    old_dec = acceptance_decisions(old_linked, ctx, summaries, "en")
-    old = attach_decisions(old_linked, old_dec)
-
     preds = predictions_frame(ranked)
-    new_dec = acceptance_decisions(preds, ctx, summaries, "en")
-    new = attach_predictions_and_decisions(mentions, preds, new_dec)
+    sentinel = preds.unionByName(spark.createDataFrame(
+        [("m0", ["Q0"])], "mention_id string, genre_prediction array<string>"))
+    old = attach_predictions_and_decisions(
+        mentions, sentinel,
+        acceptance_decisions(sentinel, ctx, summaries, "en"))
+    new = attach_predictions_and_decisions(
+        mentions, preds, acceptance_decisions(preds, ctx, summaries, "en"))
 
     assert old.columns == new.columns
     assert old.schema == new.schema
+    assert all(new.schema[c].nullable for c in (
+        "wikidata_summary", "wikidata_arguments", "arg_pairs",
+        "wikipedia_title", "wikipedia_summary"))
     assert new.exceptAll(old).count() == 0
     assert old.exceptAll(new).count() == 0
     # the sentinel row itself, explicitly
@@ -256,3 +265,35 @@ def test_attach_candidates_linear_merge_stress(spark):
     n = sorted(tuple(r) for r in new.collect())
     assert o == n
     assert len(n) > 0
+
+
+def test_classifier_scores_match_python_argmax(spark):
+    """The SQL-text keyword scorer equals a plain-Python argmax over
+    the feature tokens: keyword-hit count desc, category asc on ties,
+    FALLBACK_LABEL with score 0 when nothing hits."""
+    from kgpipe.classify import DEFAULT_KEYWORDS, FALLBACK_LABEL, _with_scores
+
+    texts = [
+        "the Drink and drink DRINK with food",       # clear winner: 3 hits
+        "food drink",                                # 1-1 tie → Drink < Food
+        "athlete artist athlete artist politician",  # 2-2 tie → Artist
+        "nothing to see here",                       # zero hits → fallback
+        "medication-vaccine medication-vaccine org",  # '-' keyword
+        "",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "id long, feature_text string")
+    out = _with_scores(df, DEFAULT_KEYWORDS)
+    assert out.schema["pred_label"].dataType.simpleString() == "string"
+    assert out.schema["pred_score"].dataType.simpleString() == "bigint"
+    got = {r["id"]: (r["pred_label"], r["pred_score"]) for r in out.collect()}
+
+    def argmax(text):
+        toks = text.lower().split(" ")
+        neg, cat = min((-toks.count(kw), cat)
+                       for cat, kw in DEFAULT_KEYWORDS.items())
+        return cat, -neg
+
+    assert got == {i: argmax(t) for i, t in enumerate(texts)}
+    assert got[1] == ("Drink", 1) and got[2] == ("Artist", 2)
+    assert got[3] == (FALLBACK_LABEL, 0) and got[5] == (FALLBACK_LABEL, 0)
