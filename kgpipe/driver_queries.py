@@ -1204,9 +1204,9 @@ def q_span_mentions(spark, sf_dir):
     match-extraction oracle (valid because SPAN_SURFACES is
     overlap-free; see _span_matches_sql). r7: tagging runs through the
     broadcast-join gazetteer operator (detect_mentions_join — the
-    pipeline's scale path, mention rows identical to the pandas-UDF
-    state machine per the equivalence pytest), removing both
-    ArrowEvalPython nodes from this query's plan."""
+    pipeline's and the stream's only tagger, mention rows identical to
+    the pure-Python reference tagger per the equivalence pytest), so
+    the plan has no ArrowEvalPython node."""
     from kgpipe.mentions import detect_mentions_join, tokenize
 
     tr = tokenize(doc_transcripts(spark, sf_dir))

@@ -8,32 +8,23 @@ matcher with the *identical I/O contract*: (words) → BIO tags. The
 downstream dataflow (span grouping per run_genre.py:77-128, marking per
 run_genre.py:203-213) is exactly the reference's.
 
-Scale notes: the tagger and span parser are Arrow-batched pandas UDFs
-keyed only on the row itself (no shuffle); the gazetteer is a broadcast
-dict; marking is a JVM-side column expression (whole-stage codegen).
+Scale notes: the tagger is JVM-only — a join of the posexploded turn
+tokens against a surface dim keyed on its first token (broadcast below
+BROADCAST_MAX_SURFACES distinct surfaces), then a per-turn greedy
+longest-match fold — and marking is a column expression, so stage 1
+starts no Python workers. The pure-Python gazetteer scan and span
+grouping below (`build_gazetteer`, `_tag_tokens`, `group_spans`) are the
+reference semantics the oracle and the tests compare against.
 """
 
 from __future__ import annotations
 
 from typing import Dict, List, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType, IntegerType, StringType, StructField, StructType,
-)
 
 from kgpipe.tags import FINE2GENERAL, rewrite_labels
-
-SPAN_SCHEMA = ArrayType(StructType([
-    StructField("text", StringType()),
-    StructField("start", IntegerType()),
-    StructField("end", IntegerType()),
-    StructField("fine_cat", StringType()),
-    StructField("general_cat", StringType()),
-]))
-
 
 # gazetteer dims below this many DISTINCT surfaces get the broadcast
 # hint in detect_mentions_join; larger sets are left to AQE
@@ -108,26 +99,6 @@ def _tag_tokens(tokens: List[str], gaz) -> List[str]:
     return tags
 
 
-def gazetteer_tagger_udf(surfaces: List[str]):
-    """Deterministic stage-1 stand-in (same contract as the XLM-R
-    tagger + 5-seed vote: tokens → IOB2 boundary tags).
-
-    The gazetteer ships as a SparkContext broadcast variable — ONE
-    executor-side copy fetched on first use — never as a UDF closure
-    capture (which would pickle the whole dict into every task)."""
-    from pyspark.sql import SparkSession
-
-    sc = SparkSession.getActiveSession().sparkContext
-    bc = sc.broadcast(build_gazetteer(surfaces))
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def tag(tokens: pd.Series) -> pd.Series:
-        gaz = bc.value
-        return tokens.map(lambda t: _tag_tokens(list(t), gaz))
-
-    return tag
-
-
 # --------------------------------------------------------- span grouping
 
 def group_spans(tokens: List[str], tags: List[str]) -> List[dict]:
@@ -164,60 +135,17 @@ def group_spans(tokens: List[str], tags: List[str]) -> List[dict]:
     return spans
 
 
-@F.pandas_udf(SPAN_SCHEMA)
-def group_spans_udf(tokens: pd.Series, tags: pd.Series) -> pd.Series:
-    return pd.Series([
-        group_spans(list(tk), list(tg)) for tk, tg in zip(tokens, tags)
-    ])
-
-
-def detect_mentions(turns: DataFrame, surfaces: List[str] | None = None,
-                    tags_col: str | None = None) -> DataFrame:
-    """transcripts(+tokens) → one row per mention with marked context.
-
-    Either tag with the gazetteer (surfaces) or consume provided gold
-    tags (tags_col). Output columns: conv_id, turn_idx, entity_id,
-    mention_id, text, start, end, fine_cat, general_cat, tokens,
-    marked_text.
-    """
-    if tags_col is None:
-        if surfaces is None:
-            raise ValueError("need surfaces or tags_col")
-        turns = turns.withColumn("tags", gazetteer_tagger_udf(surfaces)(F.col("tokens")))
-        tags_col = "tags"
-
-    spans = turns.withColumn("spans", group_spans_udf(F.col("tokens"), F.col(tags_col)))
-    m = (
-        spans.select(
-            "conv_id", "turn_idx", "tokens",
-            F.posexplode("spans").alias("entity_id", "span"),
-        )
+def surface_dim(surfaces_df: DataFrame, surface_col: str = "surface") -> DataFrame:
+    """The tagger's surface dim: one row per distinct surface (as its
+    token array), keyed on its first token."""
+    return (
+        surfaces_df.select(F.split(F.col(surface_col), " ").alias("s_toks"))
+        .distinct()
         .select(
-            "conv_id", "turn_idx", "entity_id", "tokens",
-            F.col("span.text").alias("text"),
-            F.col("span.start").alias("start"),
-            F.col("span.end").alias("end"),
-            F.col("span.fine_cat").alias("fine_cat"),
-            F.col("span.general_cat").alias("general_cat"),
+            "s_toks",
+            F.col("s_toks")[0].alias("_first_tok"),
+            F.size("s_toks").alias("s_len"),
         )
-        .withColumn(
-            "mention_id",
-            F.concat_ws("/", F.col("conv_id"), F.col("turn_idx"), F.col("entity_id")),
-        )
-    )
-    # Q2 [START]/[END] marking as pure column exprs (run_genre.py:203-213)
-    return m.withColumn(
-        "marked_text",
-        F.concat_ws(
-            " ",
-            F.concat(
-                F.expr("slice(tokens, 1, start)"),
-                F.array(F.lit("[START]")),
-                F.expr("slice(tokens, start + 1, end - start)"),
-                F.array(F.lit("[END]")),
-                F.expr("slice(tokens, end + 1, size(tokens) - end)"),
-            ),
-        ),
     )
 
 
@@ -225,18 +153,12 @@ def detect_mentions_join(turns: DataFrame, surfaces_df: DataFrame,
                          surface_col: str = "surface",
                          broadcast_dim: bool | None = None,
                          broadcast_max_surfaces: int | None = None) -> DataFrame:
-    """Fully-distributed gazetteer tagging: same output as
-    detect_mentions(surfaces=...), but the surface universe stays a
-    DataFrame end-to-end — no driver-side collect, no dict broadcast.
-    This is the scale path for KB-sized gazetteers (10⁷–10⁸ surfaces).
-
-    Plan: posexplode turn tokens → broadcast-join the surface dim on
-    the first surface token (prunes to candidate starts) → verify the
-    full token slice as a column expression → per-turn greedy
-    longest-match resolution (matches sorted by (start asc, len desc),
-    folded left-to-right: accept iff start ≥ previous accepted end —
-    exactly the _tag_tokens scan order). The only shuffle is the
-    per-turn groupBy, keyed on (conv_id, turn_idx).
+    """Stage-1 gazetteer tagging, fully distributed: turns(+tokens) →
+    one row per mention with marked context (columns conv_id, turn_idx,
+    entity_id, tokens, text, start, end, fine_cat, general_cat,
+    mention_id, marked_text). The surface universe stays a DataFrame
+    end-to-end — no driver-side collect — so KB-sized gazetteers
+    (10⁷–10⁸ surfaces) tag the same way as small ones.
 
     Broadcast policy: gazetteer-sized dims join fastest broadcast, but a
     KB-sized surface set (10⁷–10⁸ rows) must NOT be force-broadcast — it
@@ -249,7 +171,8 @@ def detect_mentions_join(turns: DataFrame, surfaces_df: DataFrame,
     at KB scale). The probe costs one Spark job per call — repeated
     callers should decide once and pass True/False (build_dims derives
     the decision for free via an Observation on the dim materialization
-    and run_pipeline threads it through).
+    and run_pipeline threads it through). To tag many frames against
+    one gazetteer, build `surface_dim` once and call `tag_with_dim`.
     """
     if broadcast_max_surfaces is None:
         broadcast_max_surfaces = BROADCAST_MAX_SURFACES
@@ -259,17 +182,25 @@ def detect_mentions_join(turns: DataFrame, surfaces_df: DataFrame,
             .limit(broadcast_max_surfaces + 1).count()
             <= broadcast_max_surfaces
         )
-    dim = (
-        surfaces_df.select(F.split(F.col(surface_col), " ").alias("s_toks"))
-        .distinct()
-        .select(
-            "s_toks",
-            F.col("s_toks")[0].alias("_first_tok"),
-            F.size("s_toks").alias("s_len"),
-        )
-    )
-    if broadcast_dim:
-        dim = F.broadcast(dim)
+    dim = surface_dim(surfaces_df, surface_col)
+    return tag_with_dim(turns, F.broadcast(dim) if broadcast_dim else dim)
+
+
+def tag_with_dim(turns: DataFrame, dim: DataFrame) -> DataFrame:
+    """detect_mentions_join against a prebuilt `surface_dim` (broadcast-
+    hinted or not by the caller).
+
+    Plan: posexplode turn tokens → join the surface dim on the first
+    surface token (prunes to candidate starts) → verify the full token
+    slice as a column expression → per-turn greedy longest-match
+    resolution (matches sorted by (start asc, len desc), folded
+    left-to-right: accept iff start ≥ previous accepted end — exactly
+    the _tag_tokens scan order) → posexplode the accepted spans, in
+    turn order, as entity ids (group_spans' enumeration) → Q2
+    [START]/[END] marking (run_genre.py:203-213). The only shuffle is
+    the per-turn groupBy, keyed on (conv_id, turn_idx). `turns` is read
+    twice (token explode and join-back): callers materialize it first.
+    """
     cand = (
         turns.select(
             "conv_id", "turn_idx", "tokens",

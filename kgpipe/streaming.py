@@ -10,7 +10,7 @@ to processing only the new rows each micro-batch delivers.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from kgpipe import schemas
@@ -48,25 +48,53 @@ def turn_rate_metrics(turns: DataFrame, window: str = "5 minutes") -> DataFrame:
 
 def incremental_mentions(turns: DataFrame, surfaces, checkpoint_dir: str,
                          out_path: str):
-    """Micro-batch incremental mention detection: each batch runs the
-    batch operator (same code path as the pipeline) and writes to the
-    mentions table. foreachBatch is only at-least-once, so the write
-    must be idempotent per batch_id to get exactly-once *effects*: each
-    batch overwrites its own `batch_id=N` subdirectory, so a micro-batch
-    retried after a partial write replaces it instead of duplicating
-    rows. Readers see batch_id as a partition column of out_path.
-    Returns the StreamingQuery (caller awaits/stops)."""
+    """Micro-batch incremental mention detection with the batch
+    pipeline's tagger: each micro-batch's rows equal
+    detect_mentions_join on the same deduplicated turns.
+
+    `surfaces`: a list of surface strings, or a DataFrame with a
+    `surface` column (keeps a KB-sized set off the driver). The surface
+    dim is built and localCheckpointed once per query; an Observation
+    on that job counts its distinct surfaces for the broadcast decision
+    (BROADCAST_MAX_SURFACES), so there is no probe job and no batch
+    re-derives the dim.
+
+    Each micro-batch is tokenized and materialized once, like the
+    pipeline's turns cut (the batch frame carries the dedup state and
+    the tagger reads its turns twice); an Observation on that job counts
+    its rows, and a batch with none (e.g. the final no-data batch)
+    writes nothing. foreachBatch is at-least-once, so each non-empty
+    batch overwrites its own `batch_id=N` directory: a retried batch
+    replaces its partial write (exactly-once effects). Readers see
+    batch_id as a partition column of out_path. Returns the
+    StreamingQuery (caller awaits/stops)."""
     import os
 
-    from kgpipe.mentions import detect_mentions, tokenize
+    from kgpipe.mentions import (
+        BROADCAST_MAX_SURFACES, surface_dim, tag_with_dim, tokenize,
+    )
+
+    if not isinstance(surfaces, DataFrame):
+        surfaces = turns.sparkSession.createDataFrame(
+            [(s,) for s in surfaces], "surface string")
+    dim_obs = Observation()
+    dim = (surface_dim(surfaces)
+           .observe(dim_obs, F.count(F.lit(1)).alias("n"))
+           .localCheckpoint(eager=True))
+    if dim_obs.get["n"] <= BROADCAST_MAX_SURFACES:
+        dim = F.broadcast(dim)
 
     def process(batch_df: DataFrame, batch_id: int):
-        if batch_df.isEmpty():
-            return
-        m = detect_mentions(tokenize(batch_df), surfaces=surfaces)
-        m.write.mode("overwrite").parquet(
-            os.path.join(out_path, f"batch_id={batch_id}")
+        obs = Observation()
+        batch_turns = (
+            tokenize(batch_df).select("conv_id", "turn_idx", "tokens")
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
         )
+        if not obs.get["n"]:
+            return
+        tag_with_dim(batch_turns, dim).write.mode("overwrite").parquet(
+            os.path.join(out_path, f"batch_id={batch_id}"))
 
     return (
         turns.writeStream.foreachBatch(process)

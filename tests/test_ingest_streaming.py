@@ -136,6 +136,78 @@ def test_streaming_dedup_and_incremental_mentions(spark, tmp_path):
         .count() == 1
 
 
+def test_streaming_mentions_equal_batch(spark, tmp_path):
+    """Streamed mentions equal the batch tagger on the same deduplicated
+    turns: 10 files at 8 files per trigger make 2 micro-batches;
+    multi-token and overlapping surfaces; turn (c0, 1) is re-delivered
+    with other text in the second micro-batch, inside the watermark, and
+    must be dropped. Surfaces as a list and as a DataFrame give the same
+    rows, and only micro-batches that carried rows write a batch_id
+    directory."""
+    import os
+    from datetime import datetime, timedelta
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from kgpipe import schemas
+    from kgpipe.mentions import detect_mentions_join, tokenize
+
+    surfaces = ["eli lilly", "eli", "new york", "york city hall", "iker"]
+    texts = ["eli lilly met iker in new york", "in new york city hall today",
+             "iker then eli eli lilly", "nothing here",
+             "york city hall and eli"]
+    t0 = datetime(2026, 1, 1)
+    files = [[(f"c{f}", i, "user", texts[(f + i) % len(texts)], None,
+               t0 + timedelta(seconds=10 * f + i)) for i in range(3)]
+             for f in range(10)]
+    redelivered = ("c0", 1, "user", "iker iker", None,
+                   t0 + timedelta(seconds=95))
+    src = tmp_path / "src"
+    src.mkdir()
+    arrow_schema = to_arrow_schema(schemas.TRANSCRIPTS)
+    cols = [f.name for f in schemas.TRANSCRIPTS.fields]
+    for f, rows in enumerate(files):
+        rows = rows + [redelivered] if f == 9 else rows
+        path = str(src / f"part-{f:02d}.parquet")
+        pq.write_table(pa.Table.from_pylist(
+            [dict(zip(cols, r)) for r in rows], schema=arrow_schema), path)
+        # the file source delivers oldest first
+        os.utime(path, (1_700_000_000 + f, 1_700_000_000 + f))
+
+    mention_cols = ["conv_id", "turn_idx", "entity_id", "mention_id", "text",
+                    "start", "end", "marked_text"]
+    batch = detect_mentions_join(
+        tokenize(spark.createDataFrame(
+            [r for rows in files for r in rows], schema=schemas.TRANSCRIPTS)),
+        spark.createDataFrame([(s,) for s in surfaces], "surface string"))
+    expected = sorted(tuple(r) for r in batch.select(*mention_cols).collect())
+
+    def stream(surf, name):
+        out = str(tmp_path / name)
+        q = streaming.incremental_mentions(
+            streaming.read_transcript_stream(spark, str(src)), surf,
+            str(tmp_path / f"ck_{name}"), out)
+        assert q.awaitTermination(120)
+        assert q.exception() is None
+        fed = {p["batchId"] for p in q.recentProgress if p["numInputRows"]}
+        written = {int(d.split("=")[1]) for d in os.listdir(out)
+                   if d.startswith("batch_id=")}
+        assert len(fed) >= 2
+        assert written == fed
+        for b in written:
+            assert spark.read.parquet(f"{out}/batch_id={b}").count() > 0
+        return sorted(tuple(r) for r in
+                      spark.read.parquet(out).select(*mention_cols).collect())
+
+    from_list = stream(surfaces, "from_list")
+    assert from_list == expected
+    assert len(expected) >= 20
+    surf_df = spark.createDataFrame([(s,) for s in surfaces], "surface string")
+    assert stream(surf_df, "from_df") == from_list
+
+
 def test_turn_rate_metrics_batch_semantics(spark):
     # run the same aggregation in batch mode to pin the window semantics
     from datetime import datetime

@@ -8,11 +8,15 @@ from kgpipe import schemas
 from kgpipe.mentions import (
     _tag_tokens,
     build_gazetteer,
-    detect_mentions,
+    detect_mentions_join,
     group_spans,
     tokenize,
     with_turn_order,
 )
+
+
+def _surfaces(spark, surfaces):
+    return spark.createDataFrame([(s,) for s in surfaces], "surface string")
 
 
 def test_group_spans_reference_semantics():
@@ -74,7 +78,7 @@ def test_detect_mentions_marking(spark):
              datetime(2026, 1, 1))]
     df = tokenize(with_turn_order(
         spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS)))
-    m = detect_mentions(df, surfaces=["eli lilly"]).collect()
+    m = detect_mentions_join(df, _surfaces(spark, ["eli lilly"])).collect()
     assert len(m) == 1
     r = m[0]
     assert (r["text"], r["start"], r["end"]) == ("eli lilly", 1, 3)
@@ -87,7 +91,7 @@ def test_mention_at_start_and_end(spark):
              datetime(2026, 1, 1))]
     df = tokenize(with_turn_order(
         spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS)))
-    m = (detect_mentions(df, surfaces=["eli lilly", "iker"])
+    m = (detect_mentions_join(df, _surfaces(spark, ["eli lilly", "iker"]))
          .orderBy("entity_id").collect())
     assert [(r["start"], r["end"]) for r in m] == [(0, 2), (4, 5)]
     assert m[0]["marked_text"].startswith("[START] eli lilly [END]")
@@ -100,42 +104,55 @@ def test_text_equality_invariant(spark, fixture_set):
     assert bad == 0
 
 
+def _reference_mentions(rows, surfaces):
+    """The reference's stage 1 + Q1 + Q2 as plain Python: greedy
+    longest-match gazetteer tags → BIO span grouping → [START]/[END]
+    marking, one tuple per mention."""
+    gaz = build_gazetteer(surfaces)
+    out = []
+    for conv_id, turn_idx, text in rows:
+        toks = text.split(" ")
+        spans = group_spans(toks, _tag_tokens(toks, gaz))
+        for eid, sp in enumerate(spans):
+            s, e = sp["start"], sp["end"]
+            marked = " ".join(toks[:s] + ["[START]"] + toks[s:e] + ["[END]"]
+                              + toks[e:])
+            out.append((conv_id, turn_idx, eid, f"{conv_id}/{turn_idx}/{eid}",
+                        sp["text"], s, e, sp["fine_cat"], sp["general_cat"],
+                        marked))
+    return sorted(out, key=lambda r: r[3])
+
+
 def test_detect_mentions_join_equivalence(spark):
     """The distributed broadcast-join tagger must produce exactly the
-    pandas-UDF gazetteer tagger's mention rows (greedy longest-match,
-    overlaps, adjacency, enumeration order)."""
-    from kgpipe.mentions import detect_mentions_join
-
+    pure-Python reference's mention rows (greedy longest-match,
+    overlaps, adjacency, enumeration order, marking)."""
     surfaces = ["eli lilly", "eli", "new york", "iker", "york city hall"]
-    rows = [
-        ("c1", 0, "user", "eli lilly and eli met in new york", None,
-         datetime(2026, 1, 1)),
+    texts = [
+        ("c1", 0, "eli lilly and eli met in new york"),
         # overlap chain: 'new york' beats 'york city hall' at pos 1
-        ("c1", 1, "user", "in new york city hall today", None,
-         datetime(2026, 1, 1)),
-        ("c2", 0, "user", "iker spoke then eli eli lilly", None,
-         datetime(2026, 1, 1)),
-        ("c2", 1, "user", "nothing here", None, datetime(2026, 1, 1)),
+        ("c1", 1, "in new york city hall today"),
+        # adjacency: 'eli' then 'eli lilly' with no gap
+        ("c2", 0, "iker spoke then eli eli lilly"),
+        ("c2", 1, "nothing here"),
     ]
-    df = tokenize(with_turn_order(
-        spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS)))
+    df = tokenize(with_turn_order(spark.createDataFrame(
+        [(c, t, "user", x, None, datetime(2026, 1, 1)) for c, t, x in texts],
+        schema=schemas.TRANSCRIPTS)))
     cols = ["conv_id", "turn_idx", "entity_id", "mention_id", "text",
             "start", "end", "fine_cat", "general_cat", "marked_text"]
-    udf_out = [tuple(r) for r in detect_mentions(df, surfaces=surfaces)
-               .select(*cols).orderBy("mention_id").collect()]
-    surf_df = spark.createDataFrame([(s,) for s in surfaces], "surface string")
-    join_out = [tuple(r) for r in detect_mentions_join(df, surf_df)
+    join_out = [tuple(r) for r in
+                detect_mentions_join(df, _surfaces(spark, surfaces))
                 .select(*cols).orderBy("mention_id").collect()]
-    assert udf_out == join_out
-    assert len(udf_out) >= 6
+    ref = _reference_mentions(texts, surfaces)
+    assert join_out == ref
+    assert len(ref) >= 6
 
 
 def test_detect_mentions_join_broadcast_gate(spark):
     """The surface dim is only broadcast-hinted below the gate; forcing
     broadcast_dim=False (the KB-scale path: AQE decides) must produce
     identical mentions."""
-    from kgpipe.mentions import detect_mentions_join, tokenize, with_turn_order
-
     df = tokenize(with_turn_order(spark.createDataFrame(
         [("c1", 0, "user", "barack obama met angela merkel", None, None)],
         "conv_id string, turn_idx int, role string, text string,"

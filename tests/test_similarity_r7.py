@@ -131,3 +131,24 @@ def test_infer_dim_empty_frame(spark):
     assert infer_dim(empty) is None
     # and the verify composition on an empty frame is empty, not an error
     assert lsh_cosine_verify(empty, n_planes=4).count() == 0
+
+
+def test_unrolled_dot_rejects_nonpositive_dim(spark):
+    """The unrolled form must refuse dim 0 (what infer_dim reads off an
+    empty vector) and negative dims with a ValueError on both the
+    SQL-string and the Column path (the string path used to build a
+    chain of no terms, a SQL parse error). infer_dim skips NULL vectors
+    (size(NULL) is NULL under ANSI mode, which it used to pass to
+    int())."""
+    schema = "vec_id long, embedding array<float>"
+    assert infer_dim(spark.createDataFrame([(0, [])], schema)) == 0
+    assert infer_dim(spark.createDataFrame(
+        [(0, None), (1, [1.0, 2.0])], schema).coalesce(1)) == 2
+    assert infer_dim(spark.createDataFrame([(0, None)], schema)) is None
+    for dim in (0, -1):
+        with pytest.raises(ValueError, match="dim > 0"):
+            dot_expr("l.v", "r.v", dim)
+        with pytest.raises(ValueError, match="dim > 0"):
+            dot_expr(F.col("a"), F.col("b"), dim)
+        with pytest.raises(ValueError, match="dim > 0"):
+            norm_expr("v", dim)
