@@ -2,8 +2,8 @@
 
 Reference semantics (GENRE/scripts_mgenre/evaluate_kilt_dataset.py:63-105):
 normalize the mention (NFKD, Hanzi-simplify, dot-variants → ·), look up
-mention→{QID:count}, optionally union the lowercased lookup with counts
-summed, sort by count desc, cap at max_candidates.
+mention→{QID:count}, union the lowercased lookup with counts summed,
+sort by count desc, cap at max_candidates.
 
 Spark-first: the dict lookup becomes a broadcast hash join against the
 `mention_counts` dim; the sort+cap becomes a per-mention window top-k.
@@ -58,10 +58,6 @@ def with_normalized_mention(df: DataFrame, text_col: str = "text") -> DataFrame:
     UDF for every row anyway. (Measured: the UDF stage was the single
     most expensive stage of the whole pipeline on an ASCII corpus —
     ~67% of one pipeline run's task time.)"""
-    import os
-
-    if os.environ.get("KGPIPE_NO_ASCII_FAST"):  # A/B measurement toggle
-        return df.withColumn("norm_mention", normalize_mention_udf(F.col(text_col)))
     is_ascii = F.col(text_col).rlike(_ASCII_RE)
     fast = df.filter(is_ascii).withColumn("norm_mention", F.col(text_col))
     slow = df.filter(~is_ascii).withColumn(
@@ -73,7 +69,6 @@ def generate_candidates(
     mentions: DataFrame,
     mention_counts: DataFrame,
     max_candidates: int = 8,
-    candidates_lowercase: bool = True,
 ) -> DataFrame:
     """mentions(mention_id, text, ...) → (mention_id, qid, cnt, cand_rank).
 
@@ -88,16 +83,13 @@ def generate_candidates(
     exact = m.join(mc, m["norm_mention"] == mc["mention"], "inner").select(
         "mention_id", "qid", "cnt"
     )
-    if candidates_lowercase:
-        lowered = m.join(
-            mc, F.lower(m["norm_mention"]) == mc["mention"], "inner"
-        ).select("mention_id", "qid", "cnt")
-        # multiset union with counts summed (evaluate_kilt_dataset.py:76-83);
-        # when norm_mention is already lowercase both probes hit the same
-        # rows and the count doubles — same as the reference's `+=`.
-        unioned = exact.unionByName(lowered)
-    else:
-        unioned = exact
+    lowered = m.join(
+        mc, F.lower(m["norm_mention"]) == mc["mention"], "inner"
+    ).select("mention_id", "qid", "cnt")
+    # multiset union with counts summed (evaluate_kilt_dataset.py:76-83);
+    # when norm_mention is already lowercase both probes hit the same
+    # rows and the count doubles — same as the reference's `+=`.
+    unioned = exact.unionByName(lowered)
 
     summed = unioned.groupBy("mention_id", "qid").agg(F.sum("cnt").alias("cnt"))
     w = Window.partitionBy("mention_id").orderBy(
@@ -113,7 +105,6 @@ def attach_candidates(
     mentions: DataFrame,
     mention_counts: DataFrame,
     max_candidates: int = 8,
-    candidates_lowercase: bool = True,
 ) -> DataFrame:
     """Shuffle-free candidate generation: same semantics as
     generate_candidates, but the dict lookup stays a *map-side* array
@@ -144,20 +135,14 @@ def attach_candidates(
                            F.col("entries").alias("_e1")),
             m["norm_mention"] == F.col("_k1"), "left")
     )
-    if candidates_lowercase:
-        j = j.join(
-            grouped.select(F.col("mention").alias("_k2"),
-                           F.col("entries").alias("_e2")),
-            F.lower(j["norm_mention"]) == F.col("_k2"), "left")
-        combined = F.concat(
-            F.coalesce("_e1", F.expr("array()").cast("array<struct<qid:string,cnt:bigint>>")),
-            F.coalesce("_e2", F.expr("array()").cast("array<struct<qid:string,cnt:bigint>>")),
-        )
-    else:
-        combined = F.coalesce(
-            F.col("_e1"),
-            F.expr("array()").cast("array<struct<qid:string,cnt:bigint>>"),
-        )
+    j = j.join(
+        grouped.select(F.col("mention").alias("_k2"),
+                       F.col("entries").alias("_e2")),
+        F.lower(j["norm_mention"]) == F.col("_k2"), "left")
+    combined = F.concat(
+        F.coalesce("_e1", F.expr("array()").cast("array<struct<qid:string,cnt:bigint>>")),
+        F.coalesce("_e2", F.expr("array()").cast("array<struct<qid:string,cnt:bigint>>")),
+    )
     # Linear per-QID merge (r7): the old form computed, for EVERY
     # distinct qid, an interpreted filter+aggregate pass over the whole
     # combined array — O(k²) expression evaluations per mention, which

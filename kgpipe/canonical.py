@@ -23,8 +23,7 @@ localCheckpoint'ed per round — that truncates the LOGICAL plan (plain
 persist does not), which otherwise grows exponentially across iterated
 self-joins.
 At 100 TB the same loop runs with the edge list partitioned by `a` and
-AQE handling the (rare) skewed super-component; GraphFrames CC is a
-drop-in replacement when the package is available.
+AQE handling the (rare) skewed super-component.
 """
 
 from __future__ import annotations
@@ -34,58 +33,11 @@ from pyspark.sql import functions as F
 
 from kgpipe.kb import qid_num
 
-# backend actually used by the last connected_components call:
-# "graphframes" when the package + jar are importable, else "loop"
-last_cc_backend: str | None = None
-# label-propagation rounds the last loop-backend call took to converge
+# label-propagation rounds the last connected_components call took to converge
 # (incl. the final no-change round). Exposed for the skew/convergence
 # tests: hash-to-min is O(log n) rounds, and a regression here turns
 # directly into serial loop jobs at billion-edge scale.
 last_cc_rounds: int | None = None
-
-
-def _graphframes_unusable(spark) -> str | None:
-    """None when the GraphFrames path can actually run; else the reason
-    it cannot. A Python `import graphframes` alone is NOT sufficient —
-    a pip-installed package without the JVM jar on the classpath, or a
-    SparkContext without a checkpoint dir (required by GraphFrames
-    connectedComponents), fails with a Py4J error at the first action,
-    which would break backend='auto''s documented fallback."""
-    try:
-        import graphframes  # noqa: F401
-    except ImportError:
-        return "python package not importable"
-    try:
-        spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-            "org.graphframes.GraphFrame")
-    except Exception:  # pragma: no cover - needs pip pkg without jar
-        return "org.graphframes.GraphFrame not on the JVM classpath"
-    try:  # pragma: no cover - requires graphframes jar
-        if spark.sparkContext.getCheckpointDir() is None:
-            return "sparkContext checkpoint dir unset (required by CC)"
-    except Exception:  # pragma: no cover
-        return "sparkContext checkpoint dir unset (required by CC)"
-    return None  # pragma: no cover - requires graphframes jar
-
-
-def _graphframes_cc(sym: DataFrame, keyf, max_iter: int) -> DataFrame:
-    """GraphFrames drop-in (used when the graphframes package + jar are
-    present — not in this sandbox): run its scalable CC, then remap each
-    component id to the member node minimizing keyf so the output
-    contract (deterministic min-key representative) is identical to the
-    hash-to-min loop."""  # pragma: no cover - requires graphframes jar
-    from graphframes import GraphFrame
-
-    vertices = sym.select(F.col("a").alias("id")).distinct()
-    g = GraphFrame(vertices, sym.select(F.col("a").alias("src"),
-                                        F.col("b").alias("dst")))
-    cc = g.connectedComponents()  # (id, component: long)
-    reps = (
-        cc.groupBy("component")
-        .agg(F.min_by("id", keyf(F.col("id"))).alias("rep"))
-    )
-    return cc.join(reps, "component").select(
-        F.col("id").alias("node"), F.col("rep").alias("component"))
 
 
 def connected_components(
@@ -94,7 +46,6 @@ def connected_components(
     dst_col: str = "dst",
     key=None,
     max_iter: int = 50,
-    backend: str = "auto",
 ) -> DataFrame:
     """(src, dst) undirected edges → (node, component); component is the
     member node minimizing `key(node)` (default: min in the node's own
@@ -103,17 +54,9 @@ def connected_components(
     is the dominant byte stream at billion-edge scale).
     Isolated nodes don't appear in edges and map to themselves — union
     them in downstream (canonicalize_qids leaves unmapped ids as-is).
-
-    backend: "auto" uses GraphFrames when the package AND jar are usable
-    (checked up front; the GraphFrames result is materialized inside the
-    guarded region, so even failures GraphFrames defers to the first
-    action fall back to the loop — a broken install can't take down
-    default callers), "loop" / "graphframes" force one path
-    ("graphframes" raises on an unusable install).
-    kgpipe.canonical.last_cc_backend records which path ran;
-    last_cc_rounds the loop rounds to convergence.
+    kgpipe.canonical.last_cc_rounds records the rounds to convergence.
     """
-    global last_cc_backend, last_cc_rounds
+    global last_cc_rounds
     keyf = key or (lambda c: c)
 
     e = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
@@ -122,35 +65,6 @@ def connected_components(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-
-    if backend in ("auto", "graphframes"):
-        reason = _graphframes_unusable(edges.sparkSession)
-        if reason is None:  # pragma: no cover - requires graphframes jar
-            try:
-                last_cc_backend = "graphframes"
-                # the loop-round counter is meaningless for this backend;
-                # clear it so telemetry read after an auto->graphframes
-                # run can't pick up a stale value from a prior loop call
-                last_cc_rounds = None
-                # materialize INSIDE the guarded region: GraphFrames
-                # failures deferred to the caller's first action on the
-                # lazy result (e.g. the min_by remap join) would escape
-                # this except and break backend="auto"'s documented
-                # fallback. The eager localCheckpoint also detaches the
-                # result from its inputs, so callers may unpersist/free
-                # the edge frame immediately (dedup_clusters relies on
-                # this for both backends).
-                return _graphframes_cc(sym, keyf, max_iter).localCheckpoint(
-                    eager=True)
-            except Exception:
-                if backend == "graphframes":
-                    raise
-                # auto: a runtime Py4J/analysis failure degrades to the
-                # loop instead of failing every default CC caller
-                last_cc_backend = "loop"
-        elif backend == "graphframes":
-            raise ImportError(f"graphframes backend unusable: {reason}")
-    last_cc_backend = "loop"
 
     def lab_struct(node_col):
         return F.struct(keyf(node_col).alias("k"), node_col.alias("n"))

@@ -41,7 +41,9 @@ Two ways to find the pending work (`resume_stage`):
 
 Commit protocol (crash-atomic): the segment (and its keys) is written
 first, then the manifest is swapped with os.replace (atomic on POSIX).
-A crash before the swap leaves an orphan v-dir that the next commit
+Every commit appends; there is no replace mode, so a DataFrame read
+from the live segments before a commit stays readable after it. A
+crash before the swap leaves an orphan v-dir that the next commit
 garbage-collects. Row counts come from an Observation on the write
 job; the per-file lineage metrics from the parquet footers. A key-
 resumed commit runs one more query, the executors' write of its keys
@@ -142,18 +144,16 @@ def _read_segments(spark: SparkSession, path: str, manifest: dict,
 
 
 def commit_stage(df: DataFrame, path: str, stage: str, *,
-                 append: bool = False, consumed: list | None = None,
+                 consumed: list | None = None,
                  keys: DataFrame | None = None) -> dict:
-    """Write df ONCE to a fresh segment dir, then atomically swap the
-    manifest. Returns the manifest.
+    """Write df ONCE to a fresh segment dir, append it to the stage's
+    live segments and atomically swap the manifest. Returns the
+    manifest.
 
-    append=False (default) replaces the stage: the new segment is the
-    only live one. append=True adds it to the live segments. `consumed`
-    names the upstream segments df was computed from; `keys` is the
-    frame of keys df was computed for, written by the executors next to
-    the segment (resume_stage's anti-join side). With append=True, a
-    commit with zero rows, zero keys and nothing consumed writes no
-    segment."""
+    `consumed` names the upstream segments df was computed from; `keys`
+    is the frame of keys df was computed for, written by the executors
+    next to the segment (resume_stage's anti-join side). A commit with
+    zero rows, zero keys and nothing consumed writes no segment."""
     os.makedirs(path, exist_ok=True)
     prev = _read_manifest(path)
     version = (prev["version"] + 1) if prev else 1
@@ -171,7 +171,7 @@ def commit_stage(df: DataFrame, path: str, stage: str, *,
             os.path.join(data_dir, KEYS_DIR))
         n_keys = kobs.get["n"]
 
-    if append and not (rows or n_keys or consumed):
+    if not (rows or n_keys or consumed):
         shutil.rmtree(data_dir, ignore_errors=True)
         if prev is not None:
             return prev
@@ -180,7 +180,7 @@ def commit_stage(df: DataFrame, path: str, stage: str, *,
         seg = {"dir": name, "rows": rows, "bytes": _dir_bytes(data_dir),
                "format": fmt, "keys": n_keys,
                "consumed": consumed or [], "files": _footer_metrics(data_dir)}
-        segments = (prev["segments"] if append and prev else []) + [seg]
+        segments = (prev["segments"] if prev else []) + [seg]
 
     manifest = {
         "stage": stage,
@@ -197,12 +197,8 @@ def commit_stage(df: DataFrame, path: str, stage: str, *,
         json.dump(manifest, f, indent=2)
     os.replace(tmp, _manifest_path(path))  # atomic swap
 
-    # GC orphaned segment dirs (crashed writes, replaced versions). The
-    # PARENT's segments are retained: a DataFrame obtained from
-    # load_stage before this commit still reads its files lazily, so
-    # deleting a just-replaced segment would fail that reader at its
-    # next action. Replaced segments go one commit later.
-    keep = {s["dir"] for s in segments + (prev["segments"] if prev else [])}
+    # GC orphaned segment dirs (crashed writes); live segments stay
+    keep = {s["dir"] for s in segments}
     for entry in os.listdir(path):
         if entry.startswith("v") and entry not in keep:
             shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
@@ -268,7 +264,7 @@ def resume_stage(
         if done is None or todo:
             pending = _read_segments(spark, work, _read_manifest(work), todo)
             commit_stage(compute(pending), checkpoint_path, stage,
-                         append=True, consumed=[s["dir"] for s in todo])
+                         consumed=[s["dir"] for s in todo])
         return load_stage(spark, checkpoint_path)
 
     spark = work.sparkSession
@@ -281,6 +277,6 @@ def resume_stage(
         if sum(s["keys"] for s in segs) <= BROADCAST_MAX_KEYS:
             committed = F.broadcast(committed)
         pending = work.join(committed, key, "left_anti")
-    commit_stage(compute(pending), checkpoint_path, stage, append=True,
+    commit_stage(compute(pending), checkpoint_path, stage,
                  keys=pending.select(key).distinct())
     return load_stage(spark, checkpoint_path)

@@ -284,10 +284,9 @@ def dedup_clusters(df: DataFrame, token_ids: DataFrame) -> DataFrame:
     # unpersist_after: minhash_lsh_pairs returns a CACHED pair frame and
     # this function is its only consumer — without the scope every
     # dedup_clusters call would pin one more cached frame for the life
-    # of the session. Safe for BOTH CC backends: connected_components
-    # returns an eagerly-materialized frame (the loop localCheckpoints
-    # per round; the GraphFrames path localCheckpoints inside its guard)
-    # so nothing downstream is lazy over `pairs`.
+    # of the session. Safe: connected_components returns an eagerly-
+    # materialized frame (localCheckpointed per round), so nothing
+    # downstream is lazy over `pairs`.
     with unpersist_after(minhash_lsh_pairs(df, token_ids)) as pairs:
         cc = connected_components(
             pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")))

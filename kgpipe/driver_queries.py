@@ -1255,9 +1255,6 @@ def q_kg_triples(spark, sf_dir):
     res = run_pipeline(
         spark, tr, entity_kb, kb_args, mention_counts, summaries,
         language="en", check_invariants=False,
-        # default SINGLE_CONSUMER_CUTS: candidates/hypotheses/ranked
-        # fuse (one consumer each; identical output, fewer cut
-        # barriers and driver jobs — pipeline.py for the measurements)
     )
     return res["triples"]
 

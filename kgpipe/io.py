@@ -103,14 +103,15 @@ def _read_marker(path: str, spark: SparkSession | None = None) -> str | None:
         return None
 
 
-def write_table(df: DataFrame, path: str, mode: str = "overwrite",
+def write_table(df: DataFrame, path: str,
                 partition_by: list[str] | None = None) -> str:
-    """Write df via the configured format; parquet fallback when the
-    format's data source is unavailable in this runtime. Returns the
-    format actually used and records it in the per-table marker."""
+    """Write df via the configured format, overwriting path; parquet
+    fallback when the format's data source is unavailable in this
+    runtime. Returns the format actually used and records it in the
+    per-table marker."""
     global last_fallback
     fmt = table_format()
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     used = fmt

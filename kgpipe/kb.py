@@ -201,9 +201,9 @@ def resolve_redirect_closure(redirects: DataFrame, max_hops: int = 10) -> DataFr
 
     Each hop is a broadcast self-join; the redirect dim is
     broadcast-sized, so the closure costs max_hops map-side joins and
-    no shuffle. With GraphFrames available this is a connected-
-    components/path-contraction job; the bounded unroll keeps exact
-    reference parity for cycles.
+    no shuffle. canonical.connected_components is the unbounded,
+    undirected counterpart; the bounded unroll keeps exact reference
+    parity for cycles.
     """
     cur = redirects.select(
         "lang", "src_title", F.col("dst_title").alias("final_title")

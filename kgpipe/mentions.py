@@ -135,11 +135,11 @@ def group_spans(tokens: List[str], tags: List[str]) -> List[dict]:
     return spans
 
 
-def surface_dim(surfaces_df: DataFrame, surface_col: str = "surface") -> DataFrame:
-    """The tagger's surface dim: one row per distinct surface (as its
+def surface_dim(surfaces_df: DataFrame) -> DataFrame:
+    """The tagger's surface dim: one row per distinct `surface` (as its
     token array), keyed on its first token."""
     return (
-        surfaces_df.select(F.split(F.col(surface_col), " ").alias("s_toks"))
+        surfaces_df.select(F.split(F.col("surface"), " ").alias("s_toks"))
         .distinct()
         .select(
             "s_toks",
@@ -150,9 +150,7 @@ def surface_dim(surfaces_df: DataFrame, surface_col: str = "surface") -> DataFra
 
 
 def detect_mentions_join(turns: DataFrame, surfaces_df: DataFrame,
-                         surface_col: str = "surface",
-                         broadcast_dim: bool | None = None,
-                         broadcast_max_surfaces: int | None = None) -> DataFrame:
+                         broadcast_dim: bool | None = None) -> DataFrame:
     """Stage-1 gazetteer tagging, fully distributed: turns(+tokens) →
     one row per mention with marked context (columns conv_id, turn_idx,
     entity_id, tokens, text, start, end, fine_cat, general_cat,
@@ -165,8 +163,8 @@ def detect_mentions_join(turns: DataFrame, surfaces_df: DataFrame,
     would OOM driver and executors. `broadcast_dim=None` (default)
     probes the DISTINCT surface count (what is actually broadcast — a
     duplicated-but-small gazetteer must not lose the hint) with a
-    short-circuiting limit scan and hints broadcast only below
-    `broadcast_max_surfaces`; above it the join is left to
+    short-circuiting limit scan and hints broadcast only up to
+    BROADCAST_MAX_SURFACES; above it the join is left to
     AQE/autoBroadcastJoinThreshold (shuffle hash join on `_first_tok`
     at KB scale). The probe costs one Spark job per call — repeated
     callers should decide once and pass True/False (build_dims derives
@@ -174,15 +172,13 @@ def detect_mentions_join(turns: DataFrame, surfaces_df: DataFrame,
     and run_pipeline threads it through). To tag many frames against
     one gazetteer, build `surface_dim` once and call `tag_with_dim`.
     """
-    if broadcast_max_surfaces is None:
-        broadcast_max_surfaces = BROADCAST_MAX_SURFACES
     if broadcast_dim is None:
         broadcast_dim = (
-            surfaces_df.select(surface_col).distinct()
-            .limit(broadcast_max_surfaces + 1).count()
-            <= broadcast_max_surfaces
+            surfaces_df.select("surface").distinct()
+            .limit(BROADCAST_MAX_SURFACES + 1).count()
+            <= BROADCAST_MAX_SURFACES
         )
-    dim = surface_dim(surfaces_df, surface_col)
+    dim = surface_dim(surfaces_df)
     return tag_with_dim(turns, F.broadcast(dim) if broadcast_dim else dim)
 
 

@@ -14,8 +14,9 @@ the `mentions`, `linked` and `enriched` stages (checkpoints.py).
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from kgpipe import checkpoints
@@ -23,28 +24,11 @@ from kgpipe.candidates import generate_candidates
 from kgpipe.classify import classify
 from kgpipe.kb import build_alias_map, build_kb_context, build_title_map
 from kgpipe.mentions import (
-    assert_text_equality, detect_mentions_join, tokenize, with_turn_order,
+    BROADCAST_MAX_SURFACES, assert_text_equality, detect_mentions_join,
+    tokenize, with_turn_order,
 )
 from kgpipe.triples import emit_triples
 
-
-# Stage cuts skipped by default: each of these frames has exactly ONE
-# downstream consumer, so cutting it buys no re-execution protection —
-# it only adds a write+read (or checkpoint) job and a stage barrier.
-# Measured (60k turns, identical triple counts): fused runs 22.6 s vs
-# 31.9 s at local[8] and 14.6 s vs 19.1 s at local[32], with the
-# per-run job count down 61 → 51 (the serial job floor is ~0.3 s of
-# driver latency per job — the largest engine-side term in the N→4N
-# scaling gap, BENCH/BASELINE.md). The multi-consumer cuts (mentions,
-# linked, decisions, classified) stay: `decisions` fused measured
-# SLOWER (25.1 s vs 22.6 at local[8]; ~3× degradation at 32 cores in
-# r2) because the aggregation feeds a fold-back join. Pass
-# skip_cuts=() to restore a cut table at every sub-step.
-# "enriched" joined the list in r7: the map-only classifier
-# (classify._with_scores) removed the scorer fold-back join, so
-# classify is now enriched's single consumer and the cut only cost a
-# ~190 MB checkpoint write+read per run.
-SINGLE_CONSUMER_CUTS = ("candidates", "hypotheses", "ranked", "enriched")
 
 # Dictionary fan-out (max QIDs per surface) above which the linking
 # stage uses the join/groupBy/window candidate path instead of the
@@ -69,76 +53,67 @@ def surfaces_df_from_dims(alias_map: DataFrame,
 
 
 def build_dims(spark: SparkSession, entity_kb: DataFrame, kb_args: DataFrame,
-               mention_counts: DataFrame, materialize: bool = True,
-               wiki_summaries: DataFrame | None = None,
+               mention_counts: DataFrame, wiki_summaries: DataFrame,
                deferred: bool = False) -> dict:
     """KB-construction sub-pipeline (the reference's preprocess_wikidata/
-    preprocess_mention_dicts stage): derive and return the broadcastable
-    lookup dims + the gazetteer surface dim. Separate from the per-turn
-    pipeline because it is KB-sized constant work, amortized over the
-    corpus — benchmark the two independently.
+    preprocess_mention_dicts stage): derive, localCheckpoint and return
+    the broadcastable lookup dims + the gazetteer surface dim. Separate
+    from the per-turn pipeline because it is KB-sized constant work,
+    amortized over the corpus — benchmark the two independently.
 
-    materialize=True localCheckpoints each dim: without it every
-    consuming job re-derives AND re-broadcasts the dim from entity_kb
-    (measured: a visible slice of the per-job fixed cost across the
-    ~40-job pipeline). The surfaces dim rides an Observation on its
-    materialization job to derive `surfaces_broadcastable` (the
-    detect_mentions_join broadcast decision) for FREE — zero extra
-    jobs, vs one probe job per tagger call otherwise."""
+    Materialized, because otherwise every consuming job re-derives AND
+    re-broadcasts each dim from entity_kb (measured: a visible slice of
+    the per-job fixed cost across the ~40-job pipeline). The surfaces
+    dim rides an Observation on its materialization job to derive
+    `surfaces_broadcastable` (the detect_mentions_join broadcast
+    decision) for FREE — zero extra jobs, vs one probe job per tagger
+    call otherwise."""
+    from kgpipe.enrich import summary_dim
+
+    obs = Observation()
     dims = {
         "title_map": build_title_map(entity_kb),
-        "alias_map": (am := build_alias_map(entity_kb)),
         "kb_context": build_kb_context(entity_kb, kb_args),
-        "surfaces_df": surfaces_df_from_dims(am, mention_counts),
-    }
-    if wiki_summaries is not None:
+        "surfaces_df": surfaces_df_from_dims(
+            build_alias_map(entity_kb), mention_counts,
+        ).observe(obs, F.count(F.lit(1)).alias("n")),
         # dedup summaries HERE (amortized, materialized with the other
         # dims) so the decisions stage's broadcast build collects a
         # finished table instead of running the groupBy serially inside
         # the build — a measured driver-side window in the scaling logs
-        from kgpipe.enrich import summary_dim
+        "summaries_dim": summary_dim(wiki_summaries),
+    }
 
-        dims["summaries_dim"] = summary_dim(wiki_summaries)
-    if materialize:
-        from pyspark.sql import Observation
+    def _ck(name, df):
+        sc = spark.sparkContext
+        sc.setJobDescription(f"kgpipe dim:{name}")  # thread-local
+        try:
+            return df.localCheckpoint(eager=True)
+        finally:
+            sc.setJobDescription(None)
 
-        from kgpipe.mentions import BROADCAST_MAX_SURFACES
-
-        obs = Observation()
-        dims["surfaces_df"] = dims["surfaces_df"].observe(
-            obs, F.count(F.lit(1)).alias("n"))
-        # The dims are mutually independent, so their eager-checkpoint
-        # jobs can run concurrently: serially each job pays the full
-        # driver schedule/plan latency (~0.3 s/job — the dominant term
-        # of the pipeline's constant serial gap, BENCH/LOCAL_sf1_r6),
-        # measured 3.8 s → ~1.3 s at sf0.1. Spark job submission is
-        # thread-safe; local scheduler interleaves the tiny dim stages.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _ck(name, df):
-            sc = spark.sparkContext
-            sc.setJobDescription(f"kgpipe dim:{name}")  # thread-local
-            try:
-                return df.localCheckpoint(eager=True)
-            finally:
-                sc.setJobDescription(None)
-
-        pool = ThreadPoolExecutor(max_workers=len(dims))
-        futures = {k: pool.submit(_ck, k, v) for k, v in dims.items()}
-        if deferred:
-            # resolve only the dim the FIRST pipeline stage consumes
-            # (the tagger's surface universe); the other checkpoint
-            # jobs stay in flight so the caller's mention stage
-            # overlaps them (guide §2.6 "overlap independent jobs") —
-            # run_pipeline resolves the futures before linking.
-            dims = {**futures}
-            dims["surfaces_df"] = futures["surfaces_df"].result()
-            pool.shutdown(wait=False)
-        else:
-            dims = {k: f.result() for k, f in futures.items()}
-            pool.shutdown()
-        dims["surfaces_broadcastable"] = (
-            (obs.get["n"] or 0) <= BROADCAST_MAX_SURFACES)
+    # The dims are mutually independent, so their eager-checkpoint
+    # jobs can run concurrently: serially each job pays the full
+    # driver schedule/plan latency (~0.3 s/job — the dominant term
+    # of the pipeline's constant serial gap, BENCH/LOCAL_sf1_r6),
+    # measured 3.8 s → ~1.3 s at sf0.1. Spark job submission is
+    # thread-safe; local scheduler interleaves the tiny dim stages.
+    pool = ThreadPoolExecutor(max_workers=len(dims))
+    futures = {k: pool.submit(_ck, k, v) for k, v in dims.items()}
+    if deferred:
+        # resolve only the dim the FIRST pipeline stage consumes
+        # (the tagger's surface universe); the other checkpoint
+        # jobs stay in flight so the caller's mention stage
+        # overlaps them (guide §2.6 "overlap independent jobs") —
+        # run_pipeline resolves the futures before linking.
+        dims = {**futures}
+        dims["surfaces_df"] = futures["surfaces_df"].result()
+        pool.shutdown(wait=False)
+    else:
+        dims = {k: f.result() for k, f in futures.items()}
+        pool.shutdown()
+    dims["surfaces_broadcastable"] = (
+        (obs.get["n"] or 0) <= BROADCAST_MAX_SURFACES)
     return dims
 
 
@@ -152,13 +127,10 @@ def run_pipeline(
     language: str = "en",
     checkpoint_dir: str | None = None,
     check_invariants: bool = True,
-    beam: int = 8,
-    max_candidates: int = 8,
     ensemble_seeds: int = 1,
     work_dir: str | None = None,
     dims: dict | None = None,
     cut_mode: str = "local",
-    skip_cuts: tuple = SINGLE_CONSUMER_CUTS,
     canonical_map: DataFrame | None = None,
 ) -> dict:
     """Returns dict of stage DataFrames: turns, mentions, linked (the
@@ -173,18 +145,18 @@ def run_pipeline(
     stage has not consumed (checkpoints.resume_stage). Everything after
     the enriched commit stays lazy, so a caller that only wants the
     commits pays nothing for classification.
-    cut_mode: how the other stage boundaries (and, without a
-    checkpoint_dir, the durable ones) are materialized — "local"
-    (default: localCheckpoint truncates lineage without a parquet
-    roundtrip; measured ~25% faster), "parquet" (write+read under
-    work_dir), "none" (fully fused — measurement baseline only).
-    skip_cuts: non-durable stage names to fuse through regardless of
-    mode.
+    cut_mode: how the other stage cuts (and, without a checkpoint_dir,
+    the durable ones) are materialized — "local" (default:
+    localCheckpoint truncates lineage without a parquet roundtrip;
+    measured ~25% faster) or "parquet" (write+read under work_dir).
     canonical_map: optional (qid, canonical_qid) frame (e.g. from
     canonical.canonicalize_qids over redirect_equivalence_edges) —
     applied to the accepted/link QIDs after enrichment, BEFORE
     classification features are consumed and triples are emitted
     (north_rule canonicalization step). Broadcast joins, no shuffle."""
+    if cut_mode not in ("local", "parquet"):
+        raise ValueError(
+            f"cut_mode must be 'local' or 'parquet', not {cut_mode!r}")
     # deferred dims: build_dims resolves only the surface dim and leaves
     # the other checkpoint jobs in flight, so the mention stage below
     # overlaps them; _dim() blocks on a still-running future only when
@@ -205,17 +177,14 @@ def run_pipeline(
     from kgpipe.io import read_table, write_table
 
     def cut(df: DataFrame, name: str) -> DataFrame:
-        # Materialize a stage boundary. Measured far faster than any
-        # lazy/persist variant: most stage outputs have 2-3 downstream
-        # consumers (candidate probe, hypothesis context, fold-back
-        # join, triple branches) and Catalyst's project collapsing
-        # otherwise re-inlines the expensive candidate/hypothesis
-        # expressions per consumer; a fused linking mega-stage also
-        # degrades at high parallelism (per-task memory shrinks with
-        # concurrency at fixed heap).
+        # Materialize a stage boundary: turns, mentions, linked,
+        # decisions, classified. A single-consumer cut costs a
+        # write+read and a barrier (60k turns, local[8]: 22.6 s fused vs
+        # 31.9 s cut), so hypotheses, ranked and enriched stay fused;
+        # fused `decisions` measured slower (25.1 s), so it stays cut.
+        # The other cuts feed 2-3 consumers each, which Catalyst's
+        # project collapsing would otherwise recompute per consumer.
         nonlocal work_dir
-        if name in skip_cuts or cut_mode == "none":
-            return df
         # label the cut's job so UI/eventlog time attributes to the
         # stage by name (guide §1.5); thread-local, reset after
         spark.sparkContext.setJobDescription(f"kgpipe cut:{name}")
@@ -238,10 +207,10 @@ def run_pipeline(
     stages = {}
 
     def durable(name: str, compute, source, key: str | None = None):
-        """The three durable cut points. `source` is the input frame,
-        resumed against `key`, or the name of the upstream durable
-        stage. With a checkpoint_dir: a resumable commit — pending =
-        source anti-joined on `key`, or the upstream stage's unconsumed
+        """The durable cut points. `source` is the input frame, resumed
+        against `key`, or the name of the upstream durable stage. With
+        a checkpoint_dir: a resumable commit — pending = source
+        anti-joined on `key`, or the upstream stage's unconsumed
         segments. Otherwise: a plain cut of compute(source)."""
         upstream = isinstance(source, str)
         if checkpoint_dir:
@@ -257,8 +226,6 @@ def run_pipeline(
     # computed CONCURRENTLY with the turn/mention cuts (one tiny dim
     # aggregation; the thread overlaps its job with the stage jobs
     # exactly like build_dims' deferred checkpoints)
-    from concurrent.futures import ThreadPoolExecutor
-
     def _max_fanout():
         row = (mention_counts.groupBy("mention")
                .agg(F.count(F.lit(1)).alias("n"))
@@ -323,22 +290,16 @@ def run_pipeline(
         #   qids/surface even the linear merge blew past a 10-minute
         #   local[8] budget on 1.2M turns where this join shape
         #   finishes the whole pipeline in 232 s (guide §2.5, §4).
-        # candidates/hypotheses/ranked are single-consumer and fuse by
-        # default (SINGLE_CONSUMER_CUTS).
         if fanout_future.result() <= IN_ROW_MAX_FANOUT:
-            hyps = score_hypotheses_inrow(
-                m_tok, mention_counts, _dim("title_map"),
-                beam=beam, max_candidates=max_candidates)
+            hyps = score_hypotheses_inrow(m_tok, mention_counts,
+                                          _dim("title_map"))
         else:
-            cands = generate_candidates(m, mention_counts,
-                                        max_candidates=max_candidates)
-            hyps = score_hypotheses(cands, m_tok, _dim("title_map"),
-                                    beam=beam)
+            cands = generate_candidates(m, mention_counts)
+            hyps = score_hypotheses(cands, m_tok, _dim("title_map"))
         # details=False: texts/scores are per-QID diagnostics nothing
         # here reads; slim rows through the marginalize agg, the rank
         # window and the fold
-        ranked = cut(marginalize(cut(hyps, "hypotheses"), details=False),
-                     "ranked")
+        ranked = marginalize(hyps, details=False)
         # r7 slim fold: the durable cut is (mention_id, genre_prediction),
         # not the wide mention rows — the decision stage reads only
         # these two columns, so the wide rows cross ONE exchange, in
@@ -368,7 +329,10 @@ def run_pipeline(
             "decisions")
         return attach_predictions_and_decisions(m, preds, decisions)
 
-    enriched = durable("enriched", enrich, "linked")
+    # without a checkpoint_dir enriched is not cut: classify is its
+    # only consumer
+    enriched = (durable("enriched", enrich, "linked") if checkpoint_dir
+                else enrich(linked))
 
     if canonical_map is not None:
         from kgpipe.canonical import apply_canonicalization
@@ -382,15 +346,12 @@ def run_pipeline(
         classified = classify_ensemble(enriched, n_variants=ensemble_seeds)
     else:
         classified = classify(enriched)
-    # if the classified frame is materialized (parquet/localCheckpoint)
-    # the two triple branches read it cheaply; otherwise let
-    # emit_triples persist its slim projection. With a checkpoint_dir
-    # nothing after the enriched commit runs until the caller asks.
-    was_cut = not (checkpoint_dir or cut_mode == "none"
-                   or "classified" in skip_cuts)
-    if was_cut:
+    # the cut classified frame feeds the two triple branches cheaply.
+    # With a checkpoint_dir nothing after the enriched commit runs until
+    # the caller asks, so emit_triples persists its slim projection.
+    if not checkpoint_dir:
         classified = cut(classified, "classified")
-    triples = emit_triples(classified, materialize=not was_cut)
+    triples = emit_triples(classified, materialize=bool(checkpoint_dir))
     return {
         "turns": turns,
         "mentions": mentions,
@@ -398,9 +359,4 @@ def run_pipeline(
         "enriched": enriched,
         "classified": classified,
         "triples": triples,
-        "dims": {
-            "title_map": _dim("title_map"),
-            "alias_map": _dim("alias_map"),
-            "kb_context": _dim("kb_context"),
-        },
     }

@@ -49,9 +49,8 @@ def get_spark(
         # the core count (measured: 20 tasks on 32 cores for the hottest
         # stage). 256k keeps post-AQE parallelism ≥ cores at bench scale;
         # at production scale partitions are ≫ this floor either way.
-        # (env override is for A/B measurement scripts only)
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("KGPIPE_AQE_MINPART", "256k"))
+                "256k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

@@ -54,6 +54,12 @@ def test_cc_cycles_and_components(spark):
         for b in uf:
             assert (out[a] == out[b]) == (uf[a] == uf[b])
 
+    # a graph that is one edge: both nodes map to the min node
+    one = spark.createDataFrame([("a", "b")], "src string, dst string")
+    assert {(r["node"], r["component"])
+            for r in connected_components(one).collect()} == {
+        ("a", "a"), ("b", "a")}
+
 
 def test_cc_generic_key_lexicographic(spark):
     df = spark.createDataFrame([("b", "c"), ("c", "a")], "src string, dst string")
@@ -136,23 +142,6 @@ def test_connected_components_typed_long_keys(spark):
         ["bigint", "bigint"]
     got = {r["node"]: r["component"] for r in out.collect()}
     assert got == {10: 10, 11: 10, 12: 10, 99: 99, 100: 99}
-
-
-def test_cc_backend_fallback_flag(spark):
-    """GraphFrames is the documented drop-in when available; this
-    container lacks it, so the hash-to-min loop must run and record
-    itself (backend='graphframes' must raise here)."""
-    import pytest as _pytest
-
-    from kgpipe import canonical
-
-    edges = spark.createDataFrame([("a", "b")], "src string, dst string")
-    out = {(r["node"], r["component"])
-           for r in canonical.connected_components(edges).collect()}
-    assert out == {("a", "a"), ("b", "a")}
-    assert canonical.last_cc_backend == "loop"
-    with _pytest.raises(ImportError):
-        canonical.connected_components(edges, backend="graphframes")
 
 
 def test_cc_star_graph_skewed_hub(spark):

@@ -13,7 +13,7 @@ from kgpipe.pipeline import run_pipeline
 from kgpipe.triples import salted_subject_counts
 
 
-def _run(spark, fixture_set, language="en", checkpoint_dir=None):
+def _run(spark, fixture_set, language="en", checkpoint_dir=None, **kw):
     return run_pipeline(
         spark,
         fixture_set["transcripts"],
@@ -23,6 +23,7 @@ def _run(spark, fixture_set, language="en", checkpoint_dir=None):
         fixture_set["wiki_summaries"],
         language=language,
         checkpoint_dir=checkpoint_dir,
+        **kw,
     )
 
 
@@ -390,31 +391,38 @@ def test_build_dims_broadcast_decision(spark, fixture_set):
 
     dims = build_dims(spark, fixture_set["entity_kb"],
                       fixture_set["kb_args"],
-                      fixture_set["mention_counts"])
+                      fixture_set["mention_counts"],
+                      fixture_set["wiki_summaries"])
     assert dims["surfaces_broadcastable"] is True
 
 
 def test_checkpoint_gc_retains_parent(spark, tmp_path):
-    """commit_stage keeps the immediately-superseded version so a live
-    DataFrame from an earlier load_stage survives one new commit
-    (ADVICE r2, kgpipe/checkpoints.py)."""
+    """Commits only append: a DataFrame from an earlier load_stage
+    survives later commits, the next load_stage reads every segment,
+    and an orphan v-dir left by a crashed write is removed at the next
+    commit while the live segments stay."""
     from kgpipe.checkpoints import commit_stage, load_stage
 
+    def ks(df):
+        return sorted(r["k"] for r in df.collect())
+
     path = str(tmp_path / "stage")
-    df1 = spark.createDataFrame([(1,)], "k int")
-    commit_stage(df1, path, "s")
+    commit_stage(spark.createDataFrame([(1,)], "k int"), path, "s")
     live = load_stage(spark, path)          # reads v000001 lazily
 
     commit_stage(spark.createDataFrame([(2,)], "k int"), path, "s")
-    # v1 (parent) retained → the pre-commit handle still collects
-    assert [r["k"] for r in live.collect()] == [1]
-    assert os.path.exists(os.path.join(path, "v000001"))
+    assert ks(live) == [1]
+    assert ks(load_stage(spark, path)) == [1, 2]
 
+    # a write that crashed before its manifest swap
+    orphan = os.path.join(path, "v000099")
+    spark.createDataFrame([(9,)], "k int").write.parquet(orphan)
     commit_stage(spark.createDataFrame([(3,)], "k int"), path, "s")
-    # two commits later the oldest version is GC'd, parent v2 retained
-    assert not os.path.exists(os.path.join(path, "v000001"))
-    assert os.path.exists(os.path.join(path, "v000002"))
-    assert [r["k"] for r in load_stage(spark, path).collect()] == [3]
+    assert not os.path.exists(orphan)
+    assert sorted(d for d in os.listdir(path) if d.startswith("v")) == [
+        "v000001", "v000002", "v000003"]
+    assert ks(load_stage(spark, path)) == [1, 2, 3]
+    assert ks(live) == [1]
 
 
 def test_linking_branch_equivalence(spark, fixture_set, monkeypatch):
@@ -444,3 +452,19 @@ def test_checkpoint_old_layout_raises(tmp_path):
         json.dumps({"version": 1, "rows": 3, "data_dir": "/gone/v000001"}))
     with pytest.raises(ValueError, match="predates segment manifests"):
         checkpoints.load_stage(None, str(tmp_path))
+
+
+def test_parquet_cut_mode_matches_default(spark, fixture_set, tmp_path,
+                                          default_triples):
+    """cut_mode="parquet" is the same stage graph with its cuts written
+    as tables under work_dir: exactly the default path's triples."""
+    work = tmp_path / "work"
+    res = _run(spark, fixture_set, cut_mode="parquet", work_dir=str(work))
+    assert _triples(res) == default_triples("en")
+    assert sorted(os.listdir(work)) == [
+        "classified", "decisions", "linked", "mentions", "turns"]
+
+
+def test_cut_mode_rejects_unknown_value(spark, fixture_set):
+    with pytest.raises(ValueError, match="'local' or 'parquet'"):
+        _run(spark, fixture_set, cut_mode="parquett")
