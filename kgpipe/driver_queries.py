@@ -282,11 +282,9 @@ Q_LANGID_SQL = _langid_sql()
 
 def q_langid_confusion(spark, sf_dir):
     """A6 confusion matrix (long form): declared × predicted counts."""
-    return (
-        q_langid(spark, sf_dir)
-        .groupBy("declared_lang", "pred_lang")
-        .agg(F.count("*").alias("n"))
-    )
+    from kgpipe.metrics import confusion_long
+
+    return confusion_long(q_langid(spark, sf_dir), "declared_lang", "pred_lang")
 
 
 Q_LANGID_CONFUSION_SQL = f"""

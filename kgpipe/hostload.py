@@ -1,5 +1,5 @@
 """Host-load disclosure helpers shared by `bench.py` and
-`scripts/run_standalone_scaling.py`.
+`perfbench/run.py`.
 
 Both harnesses commit per-window load evidence next to every timing
 they record; keeping the two implementations here (instead of one

@@ -1,7 +1,7 @@
 """Compat sources/sinks (SURVEY.md §2.1): CoNLL TSV scanner (S1),
-reference JSON sentence-dict source/sink (S2/S9), CoNLL sink (S8),
-plus the anchor/sentence normalizers (P4/P5/P10/P12) and the
-context-window truncation (Q3).
+reference JSON sentence-dict source/sink (S2/S9), plus the
+anchor/sentence normalizers (P4/P5/P10/P12) and the context-window
+truncation (Q3).
 
 The primary source of the engine is the transcripts table; these
 readers exist so a user of the reference can point the engine at the
@@ -94,32 +94,6 @@ def read_conll(spark: SparkSession, path: str) -> DataFrame:
         )
         .select("sentence_id", "words", "labels")
     )
-
-
-def write_conll(df: DataFrame, path: str,
-                word_col: str = "word", label_col: str = "label",
-                sentence_col: str = "sentence_id") -> None:
-    """S8 CoNLL sink: `word label` lines, blank line between sentences
-    (run_text_classification.py:451-471 shape). Compat export — one
-    text file per partition of sentences."""
-    per_sentence = (
-        df.groupBy(sentence_col)
-        .agg(F.array_sort(F.collect_list(
-            F.struct("token_idx", word_col, label_col))).alias("rows"))
-        .select(
-            F.col(sentence_col),
-            F.concat(
-                F.concat_ws(
-                    "\n",
-                    F.expr(f"transform(rows, r -> concat(r.{word_col}, ' ', r.{label_col}))"),
-                ),
-                F.lit("\n"),
-            ).alias("value"),
-        )
-        .orderBy(sentence_col)
-        .select("value")
-    )
-    per_sentence.write.mode("overwrite").text(path)
 
 
 def read_sentence_json(spark: SparkSession, path: str) -> DataFrame:

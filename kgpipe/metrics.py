@@ -1,4 +1,4 @@
-"""Evaluation suite (SURVEY.md §2.5 A6-A14): confusion matrices,
+"""Evaluation suite (SURVEY.md §2.5 A6-A14): confusion counts,
 span-level P/R/F1 (strong/weak), recall@k, per-word error dictionaries,
 multi-seed tables, data-quality ratios — each as a declarative plan.
 Reference analogs cited per function.
@@ -6,7 +6,7 @@ Reference analogs cited per function.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -26,16 +26,10 @@ def align_gold_pred(gold: DataFrame, pred: DataFrame) -> DataFrame:
     )
 
 
-def confusion_matrix(df: DataFrame, true_col: str = "true_label",
-                     pred_col: str = "pred_label") -> DataFrame:
-    """A6 (run_text_classification.py:39-63): true×pred counts, wide
-    (pivoted) form."""
-    return df.groupBy(true_col).pivot(pred_col).count().na.fill(0)
-
-
 def confusion_long(df: DataFrame, true_col: str = "true_label",
                    pred_col: str = "pred_label") -> DataFrame:
-    """A6 long form (stable schema for oracle comparison)."""
+    """A6 confusion counts (run_text_classification.py:39-63): one
+    (true, pred, n) row per pair, a stable schema for oracle comparison."""
     return df.groupBy(true_col, pred_col).agg(F.count("*").alias("n"))
 
 

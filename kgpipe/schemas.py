@@ -96,11 +96,6 @@ REDIRECTS = StructType([
     StructField("dst_title", StringType(), False),
 ])
 
-ALIAS_MAP = StructType([
-    StructField("alias_lc", StringType(), False),
-    StructField("qid", StringType(), False),
-])
-
 MENTION_COUNTS = StructType([
     StructField("mention", StringType(), False),
     StructField("qid", StringType(), False),

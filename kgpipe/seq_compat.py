@@ -1,8 +1,9 @@
-"""Sequence-compat operators (SURVEY.md §2.3 Q4/Q5): markup→BIO decode
-for seq2seq-style outputs and token-subsequence search with a
-normalization fallback. Pure per-row functions + Arrow-batched UDF
-wrappers; only needed for interop with the reference's auxiliary
-formats (utils.py:96-144, :267-321).
+"""Sequence-compat operators (SURVEY.md §2.3 Q4/Q5/Q6): markup→BIO decode
+for seq2seq-style outputs, token-subsequence search with a
+normalization fallback, and subword label alignment. Pure per-row
+functions; Q6 alignment also has Arrow-batched UDF wrappers (q41).
+Only needed for interop with the reference's auxiliary formats
+(utils.py:96-144, :267-321, run_ner.py:454-487).
 """
 
 from __future__ import annotations
@@ -13,7 +14,7 @@ from typing import List, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, IntegerType, StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 _PUNCT_TABLE = str.maketrans("", "", string.punctuation)
 
@@ -104,28 +105,6 @@ def subfinder(tokens: List[str], pattern: List[str],
     # note: after dropping empty tokens the positions refer to the
     # normalized list (reference behavior — utils.py:292-318)
     return scan(norm_tokens, norm_pattern, tags)
-
-
-MARKUP_SCHEMA = StructType([
-    StructField("words", ArrayType(StringType())),
-    StructField("tags", ArrayType(StringType())),
-])
-
-
-def markup_to_bio_udf(possible_labels: List[str]):
-    @F.pandas_udf(MARKUP_SCHEMA)
-    def udf(col: pd.Series) -> pd.DataFrame:
-        pairs = [markup_to_bio(x, possible_labels) for x in col]
-        return pd.DataFrame({"words": [p[0] for p in pairs],
-                             "tags": [p[1] for p in pairs]})
-    return udf
-
-
-@F.pandas_udf(ArrayType(IntegerType()))
-def subfinder_udf(tokens: pd.Series, pattern: pd.Series) -> pd.Series:
-    return pd.Series([
-        subfinder(list(t), list(p)) for t, p in zip(tokens, pattern)
-    ])
 
 
 # ------------------------------------------------- Q6 subword alignment

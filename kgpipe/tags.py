@@ -1,4 +1,4 @@
-"""Tag-sequence operators (SURVEY.md §2.2 P1/P3/P5, §2.3 Q7/Q8).
+"""Tag-sequence operators (SURVEY.md §2.2 P1, §2.3 Q7/Q8).
 
 Re-implements the reference's tag-encoding semantics
 (tag_encoding.py:4-164, eval_utils.py:47-69) from scratch. The
@@ -162,26 +162,3 @@ rewrite_iob2_udf = _array_udf(lambda t: rewrite_labels(t, "iob2"))
 rewrite_iob_udf = _array_udf(lambda t: rewrite_labels(t, "iob"))
 rewrite_bilou_udf = _array_udf(lambda t: rewrite_labels(t, "bilou"))
 merge_gap_tags_udf = _array_udf(merge_gap_tags)
-fix_tags_udf = _array_udf(lambda t: fix_tags(t, "iob2", merge_tags=True))
-
-
-def collapse_to_entity(col):
-    """P3 fine→ENTITY collapse (fine2ent.py:5-17): pure column expr."""
-    return F.when(col == "O", col).otherwise(
-        F.regexp_replace(col, r"^([BIUL])-.*$", "$1-ENTITY")
-    )
-
-
-def normalize_underscore(col):
-    """P5 `_` → `O` (preprocess_MultiCoNER2.py:44-45)."""
-    return F.when(col == "_", F.lit("O")).otherwise(col)
-
-
-def fine2general_expr(col):
-    """P2 fine→general projection as a literal-map lookup; unknown
-    categories surface as NULL for a data-quality filter downstream
-    (fine2general.py:44-59 raises instead)."""
-    pairs = []
-    for k, v in FINE2GENERAL.items():
-        pairs.extend([F.lit(k), F.lit(v)])
-    return F.element_at(F.create_map(*pairs), col)

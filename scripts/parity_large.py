@@ -22,7 +22,7 @@ n_convs = int(sys.argv[1]) if len(sys.argv) > 1 else 8000
 
 
 def main():
-    spark = get_spark("parity-large", master="local[32]")
+    spark = get_spark("parity-large")
     spark.sparkContext.setLogLevel("ERROR")
     fx = fixtures.full_fixture_set(spark, n_convs=n_convs, n_entities=500)
     tr = fx["transcripts"].persist()
@@ -66,7 +66,7 @@ exact-tuple P/R over the emitted (subj, pred, obj) sets
 | de (EN-fallback paths) | {langs['de']['precision']} | {langs['de']['recall']} | {langs['de']['f1']} | {langs['de']['n_pred']} | {langs['de']['n_gold']} |
 
 (Single-node Python twin: {langs['en']['oracle_sec']}s vs Spark
-pipeline {langs['en']['spark_sec']}s at local[32] — the twin IS the
+pipeline {langs['en']['spark_sec']}s at {spark.sparkContext.master} — the twin IS the
 reference's row-loop architecture, included for semantics, not speed.)
 """
     (REPO / "BENCH").mkdir(exist_ok=True)

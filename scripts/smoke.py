@@ -1,13 +1,14 @@
 """Dev smoke: tiny fixture set through the full pipeline."""
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from kgpipe.session import get_spark
 from kgpipe import fixtures
 from kgpipe.pipeline import run_pipeline
 
-spark = get_spark("smoke", master="local[8]")
+spark = get_spark("smoke")
 spark.sparkContext.setLogLevel("ERROR")
 
 fx = fixtures.full_fixture_set(spark, n_convs=30, n_entities=60)

@@ -30,7 +30,7 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main():
-    spark = get_spark("verify", master="local[8]")
+    spark = get_spark("verify")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

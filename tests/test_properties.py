@@ -14,22 +14,13 @@ Reference semantics under test:
   (via kgpipe.seq_compat)
 - preprocess_mention_dicts.py:97-104 normalization
   (via kgpipe.candidates)
-- the dependency-free media decoders (kgpipe.multimodal), which have
-  no reference counterpart but carry the corpus-scale stub-fallback
-  contract: decode exactly or raise, never fabricate.
 """
 from __future__ import annotations
-
-import struct
 
 import pytest
 from hypothesis import given, strategies as st
 
 from kgpipe.candidates import normalize_mention
-from kgpipe.multimodal import (
-    _decode_audio_wav,
-    _decode_video_y4m,
-)
 from kgpipe.seq_compat import markup_to_bio, subfinder
 from kgpipe.tags import (
     merge_gap_tags,
@@ -217,93 +208,6 @@ def test_subfinder_tag_gate_blocks_covered_hits(tokens, pattern):
     # in BOTH the exact pass and the normalized fallback (the fallback
     # list is never longer than the tag list), so nothing can match
     assert subfinder(tokens, pattern, tags=["B-PER"] * len(tokens)) == []
-
-
-# ------------------------------------------------------ media decoders
-
-def wav_bytes(samples: list[int], n_ch: int = 1) -> bytes:
-    """Minimal RIFF/WAVE PCM16 writer (interleaves each sample across
-    n_ch identical channels)."""
-    inter = [s for s in samples for _ in range(n_ch)]
-    data = struct.pack(f"<{len(inter)}h", *inter)
-    fmt = struct.pack("<HHIIHH", 1, n_ch, 8000, 8000 * 2 * n_ch,
-                      2 * n_ch, 16)
-    body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-samples_st = st.lists(st.integers(min_value=-32768, max_value=32767),
-                      min_size=1, max_size=64)
-
-
-@given(samples_st)
-def test_wav_features_bounded(samples):
-    feats = _decode_audio_wav(wav_bytes(samples))
-    assert len(feats) == 8
-    assert all(-1.0 <= f <= 1.0 for f in feats)
-
-
-@given(samples_st, st.integers(min_value=2, max_value=4))
-def test_wav_channel_mix_invariant(samples, n_ch):
-    # identical channels mix to the same mono signal -> identical
-    # features regardless of channel count (catches interleave bugs)
-    assert _decode_audio_wav(wav_bytes(samples, n_ch)) == \
-        _decode_audio_wav(wav_bytes(samples, 1))
-
-
-@given(samples_st)
-def test_wav_overdeclared_data_chunk_raises(samples):
-    payload = bytearray(wav_bytes(samples))
-    # inflate the data chunk's declared size past the payload end.
-    # The header offset is computed from the writer's fixed layout
-    # (RIFF8 + WAVE4 + fmt-header8 + fmt16 + "data") — searching for
-    # b"data" could false-match inside PCM bytes (samples 24932,24948
-    # pack to exactly b"data") and mutate the wrong word
-    at = 12 + 8 + 16 + 4
-    assert payload[at - 4:at] == b"data"
-    declared = struct.unpack_from("<I", payload, at)[0]
-    struct.pack_into("<I", payload, at, declared + 64)
-    with pytest.raises(ValueError):
-        _decode_audio_wav(bytes(payload))
-
-
-def y4m_bytes(frames: list[bytes], w: int, h: int, cs: str) -> bytes:
-    """Minimal Y4M writer: luma planes given, chroma zero-padded."""
-    chroma = {"mono": 0, "444": 2 * w * h, "420": (w * h) // 2}[cs]
-    head = f"YUV4MPEG2 W{w} H{h} F25:1 C{cs}\n".encode()
-    return head + b"".join(
-        b"FRAME\n" + f + b"\x00" * chroma for f in frames)
-
-
-@st.composite
-def y4m_cases(draw):
-    w = draw(st.integers(min_value=1, max_value=4)) * 2  # even for 420
-    h = draw(st.integers(min_value=1, max_value=4)) * 2
-    n = draw(st.integers(min_value=1, max_value=5))
-    frames = [bytes(draw(st.binary(min_size=w * h, max_size=w * h)))
-              for _ in range(n)]
-    return frames, w, h
-
-
-@given(y4m_cases())
-def test_y4m_features_independent_of_chroma_layout(case):
-    # identical luma planes under mono / 4:2:0 / 4:4:4 must decode to
-    # identical features — chroma exists only as a skip, and a plane-
-    # offset arithmetic bug would shift what the next frame reads
-    frames, w, h = case
-    ref = _decode_video_y4m(y4m_bytes(frames, w, h, "mono"))
-    assert _decode_video_y4m(y4m_bytes(frames, w, h, "420")) == ref
-    assert _decode_video_y4m(y4m_bytes(frames, w, h, "444")) == ref
-    assert len(ref) == 8 and all(-1.0 <= f < 1.0 for f in ref)
-
-
-@given(y4m_cases())
-def test_y4m_truncated_frame_raises(case):
-    frames, w, h = case
-    payload = y4m_bytes(frames, w, h, "444")
-    with pytest.raises(ValueError):
-        _decode_video_y4m(payload[:-1])
 
 
 # ------------------------------------------------- hostload helpers

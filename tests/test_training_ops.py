@@ -1,15 +1,13 @@
-"""Training-data ops: dedup, similarity, text stats, multimodal plumbing."""
+"""Training-data ops: dedup, similarity, text stats."""
 
 import math
 
-import pytest
 from pyspark.sql import functions as F
 
 from kgpipe.dedup import (
     MINHASH_P, MINHASH_PARAMS, exact_duplicates, jaccard_pairs,
     minhash_lsh_pairs, minhash_signatures, shingles, simhash,
 )
-from kgpipe.multimodal import extract_features, frame_sample_plan, synthetic_media
 from kgpipe.similarity import cosine_topk, lsh_bucket, with_norm
 from kgpipe.textstats import (
     build_token_ids, fingerprint, predict_language, quality_score,
@@ -122,22 +120,6 @@ def test_lsh_bucket_shape(spark):
     b = lsh_bucket(emb, n_planes=4).collect()
     assert len(b) == 20
     assert all(0 <= r["bucket"] < 16 for r in b)
-
-
-def test_multimodal_features_and_frames(spark):
-    media = synthetic_media(spark, n=30)
-    feats = extract_features(media, dim=8).collect()
-    assert len(feats) == 30
-    assert all(len(r["feature"]) == 8 for r in feats)
-    assert all(-1.0 <= x < 1.0 for r in feats for x in r["feature"])
-    # deterministic: same payload → same digest
-    again = {r["media_id"]: r["digest"]
-             for r in extract_features(media, dim=8).collect()}
-    for r in feats:
-        assert again[r["media_id"]] == r["digest"]
-    frames = frame_sample_plan(media, every_ms=500)
-    per_video = frames.groupBy("media_id").count().collect()
-    assert all(r["count"] == 2 for r in per_video)  # 0ms + 500ms of 1000ms
 
 
 def test_sessionize(spark):
@@ -341,340 +323,6 @@ def test_ivf_train_balances_cells_and_lifts_recall(spark):
               for r in ivf_assign(emb, trained).collect()}
     for r in ivf_topk(emb, emb, k=3, nprobe=1, centroids=trained).collect():
         assert assign[r["neighbor_id"]] == assign[r["query_id"]]
-
-
-def test_decode_backend_flag(spark):
-    """The multimodal decode kernel is an optional import: this
-    container has no Pillow, so the recorded backend must be
-    'ppm+wav+y4m-avi+stub' (real dependency-free PPM/PGM, WAV/PCM and
-    Y4M/uncompressed-AVI decodes, stub for other formats; an environment
-    with PIL flips the image kernel to 'pil+wav+y4m-avi' without plan
-    changes)."""
-    from kgpipe import multimodal
-
-    try:
-        import PIL  # noqa: F401
-
-        has_pil = True
-    except ImportError:
-        has_pil = False
-    assert multimodal.decode_backend() == (
-        "pil+wav+y4m-avi" if has_pil else "ppm+wav+y4m-avi+stub")
-    if not has_pil:
-        # stub path: features are the documented digest-fold fake
-        media = synthetic_media(spark, n=3)
-        row = extract_features(media, dim=8).filter(F.col("media_id") == 0) \
-            .collect()[0]
-        payload = media.filter(F.col("media_id") == 0).collect()[0]["content"]
-        expect = multimodal._decode_image_stub(bytes(payload), 8)
-        assert all(abs(a - b) < 1e-6          # float32 column vs py floats
-                   for a, b in zip(row["feature"], expect))
-
-
-def test_ppm_decode_known_luminance(spark):
-    """The dependency-free PGM/PPM kernel is a REAL decode, verified
-    against hand-computed luminance — the in-container stand-in for the
-    PIL path (same [-1, 1) contract: px/128 − 1)."""
-    from kgpipe import multimodal
-
-    # P5 grayscale 8x2, column x has luminance 16*x in both rows
-    row = bytes(16 * x for x in range(8))
-    pgm = b"P5\n# comment\n8 2\n255\n" + row + row
-    feats = multimodal._decode_image_ppm(pgm, dim=8)
-    assert feats == [16 * x / 128.0 - 1.0 for x in range(8)]
-    assert all(-1.0 <= f < 1.0 for f in feats)
-
-    # P6 RGB with R=G=B=v → ITU-R 601-2 luminance == v exactly
-    rgb = b"".join(bytes([16 * x] * 3) for x in range(8))
-    ppm = b"P6 8 1 255\n" + rgb
-    assert multimodal._decode_image_ppm(ppm, dim=8) == feats
-
-    # dim < width: equal-width band box-average (bands of 2 columns)
-    assert multimodal._decode_image_ppm(pgm, dim=4) == [
-        (16 * (2 * b) + 16 * (2 * b + 1)) / 2 / 128.0 - 1.0
-        for b in range(4)
-    ]
-
-    # corrupt/truncated P5 payloads fall back to the stub row-wise
-    bad = b"P5 8 2 255\n" + row  # half the raster missing
-    assert multimodal._decode_image(bad, 8) == \
-        multimodal._decode_image_stub(bad, 8)
-
-    # end-to-end through the Arrow-batched plan: a PGM media row gets
-    # the real decode, a non-PPM row the stub, in the same batch
-    media = spark.createDataFrame(
-        [(0, "image", bytearray(pgm), None, None, None, None),
-         (1, "image", bytearray(b"not-an-image"), None, None, None, None)],
-        schema=multimodal.MEDIA_SCHEMA)
-    out = {r["media_id"]: list(r["feature"])
-           for r in extract_features(media, dim=8).collect()}
-    assert all(abs(a - b) < 1e-6 for a, b in zip(out[0], feats))
-    assert all(abs(a - b) < 1e-6 for a, b in zip(
-        out[1], multimodal._decode_image_stub(b"not-an-image", 8)))
-
-
-def _y4m(frames: list, w: int, h: int, cs: str = "mono") -> bytes:
-    """Minimal YUV4MPEG2 stream: each frame is a list of Y-plane bytes
-    (chroma planes, when the colourspace has them, are zero-filled —
-    the kernel never reads them)."""
-    from kgpipe.multimodal import _Y4M_BPP
-
-    pad = int(w * h * _Y4M_BPP[cs]) - w * h
-    head = f"YUV4MPEG2 W{w} H{h} F25:1 Ip A1:1 C{cs}\n".encode()
-    return head + b"".join(
-        b"FRAME\n" + bytes(f) + bytes(pad) for f in frames)
-
-
-def _avi(frames: list, w: int, h: int, bits: int = 24) -> bytes:
-    """Minimal uncompressed RIFF/AVI: hdrl (avih + strl(strh 'vids' +
-    strf BITMAPINFOHEADER BI_RGB)) + movi with one '00db' DIB chunk per
-    frame. Each frame is a list of rows, each row a list of pixel byte
-    tuples (B,G,R) for 24-bit or single ints for 8-bit; rows are given
-    TOP-down here and written bottom-up with 4-byte stride padding, as
-    DIB requires."""
-    import struct as _s
-
-    def chunk(cid, body):
-        return cid + _s.pack("<I", len(body)) + body + (b"\0" if len(body) & 1 else b"")
-
-    def lst(ltype, body):
-        return chunk(b"LIST", ltype + body)
-
-    bpp = bits // 8
-    stride = (w * bpp + 3) & ~3
-    avih = _s.pack("<IIIIIIIIIIIIII", 40000, 0, 0, 0, len(frames), 0, 1,
-                   0, w, h, 0, 0, 0, 0)
-    strh = b"vids" + b"DIB " + _s.pack("<IHHIIIIIIIII4H", 0, 0, 0, 0, 1,
-                                       25, 0, len(frames), 0, 0, 0, 0,
-                                       0, 0, w, h)
-    strf = _s.pack("<IiiHHIIiiII", 40, w, h, 1, bits, 0, stride * h,
-                   0, 0, 0, 0)
-    movi_frames = b""
-    for f in frames:
-        raster = b""
-        for row in reversed(f):  # DIB rows are bottom-up
-            if bits == 24:
-                rb = b"".join(bytes(px) for px in row)
-            else:
-                rb = bytes(row)
-            raster += rb + bytes(stride - len(rb))
-        movi_frames += chunk(b"00db", raster)
-    body = (lst(b"hdrl", chunk(b"avih", avih)
-                + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-            + lst(b"movi", movi_frames))
-    return b"RIFF" + _s.pack("<I", 4 + len(body)) + b"AVI " + body
-
-
-def test_video_decode_known_luminance(spark):
-    """The dependency-free Y4M and uncompressed-AVI kernels are REAL
-    decodes, verified against hand-computed per-frame mean luminance —
-    video joins image (PPM) and audio (WAV) as an in-container-verified
-    media kind; no kind silently hash-stubs anymore. Contract:
-    per-TIME-band mean luma, mean/128 − 1 (shared with the image
-    kernel)."""
-    from kgpipe import multimodal
-
-    # Y4M mono 4x2, 2 frames: all-128 → 0.0, all-0 → −1.0
-    clip = _y4m([[128] * 8, [0] * 8], w=4, h=2)
-    assert multimodal._decode_video_y4m(clip, dim=2) == [0.0, -1.0]
-    # kernel dispatch by magic hits the same path
-    assert multimodal._decode_video(clip, dim=2) == [0.0, -1.0]
-
-    # C420 chroma is skipped, not decoded: Y=64 everywhere → −0.5
-    c420 = _y4m([[64] * 4], w=2, h=2, cs="420")
-    assert multimodal._decode_video_y4m(c420, dim=1) == [-0.5]
-
-    # 4 frames into 2 bands: band mean of per-frame means
-    clip4 = _y4m([[0] * 8, [64] * 8, [128] * 8, [192] * 8], w=4, h=2)
-    assert multimodal._decode_video_y4m(clip4, dim=2) == [
-        (0 + 64) / 2 / 128.0 - 1.0, (128 + 192) / 2 / 128.0 - 1.0]
-
-    # AVI 24-bit BGR 2x1, 2 frames: white → 255 → 0.9921875, black → −1
-    # (B=G=R=v → ITU 601-2 luminance == v exactly, like the PPM test)
-    white = [[(255, 255, 255), (255, 255, 255)]]
-    black = [[(0, 0, 0), (0, 0, 0)]]
-    avi = _avi([white, black], w=2, h=1)
-    assert multimodal._decode_video_avi(avi, dim=2) == \
-        [255 / 128.0 - 1.0, -1.0]
-    assert multimodal._decode_video(avi, dim=2) == \
-        [255 / 128.0 - 1.0, -1.0]
-
-    # AVI 8-bit grayscale with stride padding (w=3 → stride 4): the pad
-    # byte must NOT leak into the mean
-    g = _avi([[[30, 60, 90]]], w=3, h=1, bits=8)
-    assert multimodal._decode_video_avi(g, dim=1) == [60 / 128.0 - 1.0]
-
-    # malformed payloads fall back to the stub row-wise, never decode
-    # truncated bytes: chopped Y4M frame, lying RIFF chunk size,
-    # unknown container, corrupt BITMAPINFOHEADER geometry (biWidth is
-    # signed; w <= 0 must raise, not slice empty rows into fake -1.0s)
-    i = avi.index(b"strf") + 12  # strf body: biSize(4) then biWidth
-    neg_w = avi[:i] + (-2).to_bytes(4, "little", signed=True) + avi[i + 4:]
-    for bad in (clip[:-4], avi[:-4], b"mpeg?", neg_w):
-        assert multimodal._decode_media("video", bad, 8) == \
-            multimodal._decode_image_stub(bad, 8)
-
-    # end-to-end through the Arrow-batched plan: real video decode and
-    # stub fallback in the same batch (per-kind dispatch)
-    media = spark.createDataFrame(
-        [(0, "video", bytearray(clip), None, None, None, None),
-         (1, "video", bytearray(b"mpeg?"), None, None, None, None)],
-        schema=multimodal.MEDIA_SCHEMA)
-    out = {r["media_id"]: list(r["feature"])
-           for r in extract_features(media, dim=2).collect()}
-    assert all(abs(a - b) < 1e-6 for a, b in zip(out[0], [0.0, -1.0]))
-    assert all(abs(a - b) < 1e-6 for a, b in zip(
-        out[1], multimodal._decode_image_stub(b"mpeg?", 2)))
-
-
-def test_frame_sample_plan_real_counts(spark):
-    """frame_sample_plan(use_payload_frames=True) fans out one row per
-    REAL container frame (header/chunk walk via video_frame_count, luma
-    untouched), not per metadata-declared timestamp; unparseable
-    payloads fan out to zero rows."""
-    from kgpipe import multimodal
-
-    clip3 = _y4m([[0] * 8] * 3, w=4, h=2)          # 3 frames
-    avi2 = _avi([[[(9, 9, 9)]]] * 2, w=1, h=1)      # 2 frames
-    assert multimodal.video_frame_count(clip3) == 3
-    assert multimodal.video_frame_count(avi2) == 2
-
-    media = spark.createDataFrame(
-        [(0, "video", bytearray(clip3), None, None, None, 9999),
-         (1, "video", bytearray(avi2), None, None, None, 9999),
-         (2, "video", bytearray(b"mpeg?"), None, None, None, 9999),
-         (3, "image", bytearray(b"P5 1 1 255\n\x00"), None, None, None, 0)],
-        schema=multimodal.MEDIA_SCHEMA)
-    rows = frame_sample_plan(media, use_payload_frames=True).collect()
-    got = {}
-    for r in rows:
-        got.setdefault(r["media_id"], []).append(r["frame_idx"])
-    assert got == {0: [0, 1, 2], 1: [0, 1]}  # no unparseable, no image
-
-    # stride: every 2nd frame
-    rows = frame_sample_plan(media, use_payload_frames=True,
-                             every_n_frames=2).collect()
-    got = {}
-    for r in rows:
-        got.setdefault(r["media_id"], []).append(r["frame_idx"])
-    assert got == {0: [0, 2], 1: [0]}
-
-
-def _wav(samples_bytes: bytes, n_ch: int = 1, bits: int = 16,
-         rate: int = 8000) -> bytes:
-    """Minimal valid RIFF/WAVE container around a raw PCM data chunk."""
-    import struct as _s
-
-    block = n_ch * bits // 8
-    fmt = _s.pack("<HHIIHH", 1, n_ch, rate, rate * block, block, bits)
-    chunks = (b"fmt " + _s.pack("<I", len(fmt)) + fmt
-              + b"data" + _s.pack("<I", len(samples_bytes)) + samples_bytes)
-    return b"RIFF" + _s.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def test_wav_decode_known_rms(spark):
-    """The dependency-free WAV/PCM kernel is a REAL decode, verified
-    against hand-computed per-band RMS — the audio analog of the PPM
-    image kernel (feature = 2·(rms/full_scale) − 1)."""
-    import struct as _s
-
-    from kgpipe import multimodal
-
-    # 16-bit mono, 8 frames, dim=2 bands: band 0 silent → −1.0,
-    # band 1 alternating ±16384 → rms 16384 → feature 0.0
-    pcm16 = _s.pack("<8h", 0, 0, 0, 0, 16384, -16384, 16384, -16384)
-    assert multimodal._decode_audio_wav(_wav(pcm16), dim=2) == [-1.0, 0.0]
-
-    # 8-bit mono (unsigned, centered at 128): [128]*4 → −1.0;
-    # 192/64 alternating → |dev| 64 → rms 64 → 2·(64/128)−1 = 0.0
-    pcm8 = bytes([128, 128, 128, 128, 192, 64, 192, 64])
-    assert multimodal._decode_audio_wav(_wav(pcm8, bits=8), dim=2) == \
-        [-1.0, 0.0]
-
-    # stereo mixes channels per frame BEFORE banding: L=16384, R=-16384
-    # → mono 0 → silent
-    st = _s.pack("<8h", *([16384, -16384] * 4))
-    assert multimodal._decode_audio_wav(_wav(st, n_ch=2), dim=2) == \
-        [-1.0, -1.0]
-
-    # malformed RIFF (truncated data) raises; the dispatcher falls back
-    # to the stub row-wise instead of failing the batch
-    bad = _wav(b"")
-    assert multimodal._decode_media("audio", bad, 8) == \
-        multimodal._decode_image_stub(bad, 8)
-
-    # a chunk whose DECLARED size exceeds the actual payload must raise
-    # (→ stub), never silently decode the truncated bytes into
-    # real-looking features: chop the last 4 bytes off a valid file
-    lying = _wav(pcm16)[:-4]
-    with pytest.raises(ValueError, match="truncated RIFF chunk"):
-        multimodal._decode_audio_wav(lying, dim=2)
-    assert multimodal._decode_media("audio", lying, 8) == \
-        multimodal._decode_image_stub(lying, 8)
-
-    # end-to-end through the Arrow-batched plan: an audio WAV row gets
-    # the real decode, an image PGM row the image kernel, a video row
-    # the stub — all in the same batch (per-kind dispatch)
-    pgm = b"P5 8 1 255\n" + bytes(16 * x for x in range(8))
-    media = spark.createDataFrame(
-        [(0, "audio", bytearray(_wav(pcm16)), None, None, None, None),
-         (1, "image", bytearray(pgm), None, None, None, None),
-         (2, "video", bytearray(b"mpeg?"), None, None, None, None)],
-        schema=multimodal.MEDIA_SCHEMA)
-    out = {r["media_id"]: list(r["feature"])
-           for r in extract_features(media, dim=2).collect()}
-    assert all(abs(a - b) < 1e-6 for a, b in zip(out[0], [-1.0, 0.0]))
-    assert all(abs(a - b) < 1e-6 for a, b in zip(
-        out[1], multimodal._decode_image_ppm(pgm, 2)))
-    assert all(abs(a - b) < 1e-6 for a, b in zip(
-        out[2], multimodal._decode_image_stub(b"mpeg?", 2)))
-
-
-def test_pil_kernel_glue_via_fake(spark, monkeypatch):
-    """_decode_image_pil's glue — the open/convert/resize/getdata call
-    sequence, the px/128 − 1 mapping, the row-wise corrupt fallback —
-    exercised through a minimal PIL-API fake (Pillow itself cannot be
-    installed in this container; numeric agreement with real Pillow
-    still requires an environment that ships it — the PPM kernel proves
-    the shared contract here)."""
-    from kgpipe import multimodal
-
-    class _FakeImg:
-        def __init__(self, px):
-            self._px = px
-
-        def convert(self, mode):
-            assert mode == "L"
-            return self
-
-        def resize(self, wh):
-            w, h = wh
-            assert h == 1
-            return _FakeImg(self._px[:w])
-
-        def getdata(self):
-            return list(self._px)
-
-    class _FakePIL:
-        @staticmethod
-        def open(fp):
-            data = fp.read()
-            if not data.startswith(b"OKIMG"):
-                raise OSError("cannot identify image file")
-            return _FakeImg(list(data[5:]))
-
-    monkeypatch.setattr(multimodal, "_PILImage", _FakePIL)
-    monkeypatch.setattr(multimodal, "_HAS_PIL", True)
-    assert multimodal.decode_backend() == "pil+wav+y4m-avi"
-
-    payload = b"OKIMG" + bytes([0, 64, 128, 192, 255, 16, 32, 48, 99])
-    feats = multimodal._decode_image(payload, dim=8)
-    assert feats == [px / 128.0 - 1.0
-                     for px in [0, 64, 128, 192, 255, 16, 32, 48]]
-    # payloads the (fake) decoder rejects fall back to the stub row-wise
-    bad = b"corrupt"
-    assert multimodal._decode_image(bad, 8) == \
-        multimodal._decode_image_stub(bad, 8)
 
 
 def test_jaccard_max_df_none_uncapped(spark):
