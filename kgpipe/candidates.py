@@ -57,7 +57,18 @@ def with_normalized_mention(df: DataFrame, text_col: str = "text") -> DataFrame:
     extracts Python UDFs out of conditionals and would evaluate the
     UDF for every row anyway. (Measured: the UDF stage was the single
     most expensive stage of the whole pipeline on an ASCII corpus —
-    ~67% of one pipeline run's task time.)"""
+    ~67% of one pipeline run's task time.)
+
+    A frame that already carries `norm_mention` is returned as it is,
+    so its plan holds no Python UDF at all — even an empty UDF branch
+    makes the JVM start Python workers. run_pipeline's link() is the
+    one caller that supplies it: its turns cut counts the non-ASCII
+    turns (_ASCII_RE) on the cut's own job, and a mention is a token
+    slice of its turn, so zero non-ASCII turns (and no leftover mention
+    segment tagged by an earlier run) means every mention text is ASCII
+    and norm_mention = text."""
+    if "norm_mention" in df.columns:
+        return df
     is_ascii = F.col(text_col).rlike(_ASCII_RE)
     fast = df.filter(is_ascii).withColumn("norm_mention", F.col(text_col))
     slow = df.filter(~is_ascii).withColumn(

@@ -24,6 +24,19 @@ Segments are named relative to the stage directory, so a moved or
 copied checkpoint directory reads its own segments; a listed segment
 that is missing raises instead of silently recomputing.
 
+Layout of a run_pipeline checkpoint_dir (every entry is a stage
+directory with a manifest that carries `rows`):
+
+  <checkpoint_dir>/mentions/    append-only segments, key-resumed on
+                                conv_id
+  <checkpoint_dir>/linked/      append-only segments, consuming mentions
+  <checkpoint_dir>/enriched/    append-only segments, consuming linked
+  <checkpoint_dir>/{title_map,kb_context,surfaces_df,summaries_dim}/
+                                the KB dims (DIMS) of a file-backed KB:
+                                one segment each, whose manifests also
+                                record `kb` (kb_fingerprint),
+                                `surfaces_broadcastable` and `max_fanout`
+
 Two ways to find the pending work (`resume_stage`):
 - against a key: the work frame is anti-joined ONCE with the committed
   keys (the union of the segments' `_keys`) — broadcast while the
@@ -41,15 +54,17 @@ Two ways to find the pending work (`resume_stage`):
 
 Commit protocol (crash-atomic): the segment (and its keys) is written
 first, then the manifest is swapped with os.replace (atomic on POSIX).
-Every commit appends; there is no replace mode, so a DataFrame read
-from the live segments before a commit stays readable after it. A
+Every stage commit appends, so a DataFrame read from the live segments
+before a commit stays readable after it. Only the KB dims are replaced
+(commit_dims): dims built from other KB files are never appended to. A
 crash before the swap leaves an orphan v-dir that the next commit
-garbage-collects. Row counts come from an Observation on the write
-job; the per-file lineage metrics from the parquet footers. A key-
-resumed commit runs one more query, the executors' write of its keys
-(a scan of the key column and a distinct). A commit that observed zero rows, zero
-keys and consumed nothing writes no segment and leaves the manifest
-untouched.
+garbage-collects; a dims commit that dies between its four manifest
+swaps leaves fingerprints that disagree, so the next run rebuilds.
+Row counts come from an Observation on the write job; the per-file
+lineage metrics from the parquet footers. A key-resumed commit runs one
+more query, the executors' write of its keys (a scan of the key column
+and a distinct). A stage commit that observed zero rows, zero keys and
+consumed nothing writes no segment and leaves the manifest untouched.
 
 Segments are never compacted: a stage resumed N times reads N segment
 directories. Compaction (rewrite the live segments into one, carrying
@@ -143,54 +158,44 @@ def _read_segments(spark: SparkSession, path: str, manifest: dict,
     return reduce(DataFrame.unionByName, (read_table(spark, d) for d in dirs))
 
 
-def commit_stage(df: DataFrame, path: str, stage: str, *,
-                 consumed: list | None = None,
-                 keys: DataFrame | None = None) -> dict:
-    """Write df ONCE to a fresh segment dir, append it to the stage's
-    live segments and atomically swap the manifest. Returns the
-    manifest.
-
-    `consumed` names the upstream segments df was computed from; `keys`
-    is the frame of keys df was computed for, written by the executors
-    next to the segment (resume_stage's anti-join side). A commit with
-    zero rows, zero keys and nothing consumed writes no segment."""
+def _write_segment(df: DataFrame, path: str,
+                   keys: DataFrame | None = None) -> dict:
+    """Write df ONCE to the stage's next segment dir (and `keys` next to
+    it); returns the segment entry, not yet listed in any manifest."""
     os.makedirs(path, exist_ok=True)
     prev = _read_manifest(path)
-    version = (prev["version"] + 1) if prev else 1
-    name = f"v{version:06d}"
+    name = f"v{(prev['version'] + 1) if prev else 1:06d}"
     data_dir = os.path.join(path, name)
 
     obs = Observation()
     fmt = write_table(df.observe(obs, F.count(F.lit(1)).alias("rows")),
                       data_dir)
-    rows = obs.get["rows"]
     n_keys = 0
     if keys is not None:
         kobs = Observation()
         keys.observe(kobs, F.count(F.lit(1)).alias("n")).write.parquet(
             os.path.join(data_dir, KEYS_DIR))
         n_keys = kobs.get["n"]
+    return {"dir": name, "rows": obs.get["rows"], "bytes": _dir_bytes(data_dir),
+            "format": fmt, "keys": n_keys, "files": _footer_metrics(data_dir)}
 
-    if not (rows or n_keys or consumed):
-        shutil.rmtree(data_dir, ignore_errors=True)
-        if prev is not None:
-            return prev
-        segments = []  # first commit of an empty stage: schema only
-    else:
-        seg = {"dir": name, "rows": rows, "bytes": _dir_bytes(data_dir),
-               "format": fmt, "keys": n_keys,
-               "consumed": consumed or [], "files": _footer_metrics(data_dir)}
-        segments = (prev["segments"] if prev else []) + [seg]
 
+def _swap_manifest(path: str, stage: str, schema: StructType,
+                   segments: list, **meta) -> dict:
+    """Atomically make `segments` the stage's live segments, then GC
+    every other segment dir. Returns the manifest."""
+    prev = _read_manifest(path)
+    version = (prev["version"] + 1) if prev else 1
     manifest = {
         "stage": stage,
         "version": version,
         "rows": sum(s["rows"] for s in segments),
-        "data_dir": os.path.abspath(data_dir),
+        "data_dir": os.path.abspath(os.path.join(path, f"v{version:06d}")),
         "committed_at": time.time(),
-        "schema": df.schema.json(),
+        "schema": schema.json(),
         "parent_version": prev["version"] if prev else None,
         "segments": segments,
+        **meta,
     }
     tmp = _manifest_path(path) + ".tmp"
     with open(tmp, "w", encoding="utf8") as f:
@@ -203,6 +208,99 @@ def commit_stage(df: DataFrame, path: str, stage: str, *,
         if entry.startswith("v") and entry not in keep:
             shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
     return manifest
+
+
+def commit_stage(df: DataFrame, path: str, stage: str, *,
+                 consumed: list | None = None,
+                 keys: DataFrame | None = None) -> dict:
+    """Write df ONCE to a fresh segment dir, append it to the stage's
+    live segments and atomically swap the manifest. Returns the
+    manifest.
+
+    `consumed` names the upstream segments df was computed from; `keys`
+    is the frame of keys df was computed for, written by the executors
+    next to the segment (resume_stage's anti-join side). A commit with
+    zero rows, zero keys and nothing consumed writes no segment."""
+    seg = _write_segment(df, path, keys)
+    prev = _read_manifest(path)
+    if not (seg["rows"] or seg["keys"] or consumed):
+        shutil.rmtree(os.path.join(path, seg["dir"]), ignore_errors=True)
+        if prev is not None:
+            return prev
+        segments = []  # first commit of an empty stage: schema only
+    else:
+        segments = (prev["segments"] if prev else []) + [
+            {**seg, "consumed": consumed or []}]
+    return _swap_manifest(path, stage, df.schema, segments)
+
+
+# The KB dims run_pipeline commits under its checkpoint_dir, one stage
+# directory each (run_pipeline's dims dict keys).
+DIMS = ("title_map", "kb_context", "surfaces_df", "summaries_dim")
+
+
+def kb_fingerprint(frames: list) -> list | None:
+    """What KB dims built from `frames` depend on: per frame, its file
+    format, schema and input files with their size and modification
+    time — the listing the read already made on the driver, no Spark
+    job. None when a frame is not a bare file read (in-memory, filtered,
+    joined, ...): no listing tells its rows apart."""
+    out = []
+    for df in frames:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() != "LogicalRelation":
+            return None
+        rel = plan.relation()
+        if rel.getClass().getSimpleName() != "HadoopFsRelation":
+            return None
+        files = rel.location().allFiles()
+        out.append({
+            "format": rel.fileFormat().toString(),
+            "schema": df.schema.json(),
+            "files": sorted(
+                [f.getPath().toString(), f.getLen(), f.getModificationTime()]
+                for f in (files.apply(i) for i in range(files.size()))),
+        })
+    return out
+
+
+def load_dims(spark: SparkSession, checkpoint_dir: str,
+              fingerprint: list) -> dict | None:
+    """The committed KB dims (lazy reads, no Spark job) with the
+    decisions their manifests record, or None unless every dim's
+    manifest records `fingerprint`: a first run, a changed KB file and a
+    dims commit that died before its last manifest all rebuild."""
+    paths = {name: os.path.join(checkpoint_dir, name) for name in DIMS}
+    manifests = {name: _read_manifest(path) for name, path in paths.items()}
+    if any(m is None or m.get("kb") != fingerprint
+           for m in manifests.values()):
+        return None
+    dims = {name: _read_segments(spark, paths[name], m, m["segments"])
+            for name, m in manifests.items()}
+    meta = manifests["surfaces_df"]
+    return {**dims, "surfaces_broadcastable": meta["surfaces_broadcastable"],
+            "max_fanout": meta["max_fanout"]}
+
+
+def write_dim(df: DataFrame, checkpoint_dir: str, name: str) -> tuple:
+    """Write one KB dim as a new segment of its stage directory; no
+    manifest lists it until commit_dims. Returns (schema, segment)."""
+    return df.schema, _write_segment(df, os.path.join(checkpoint_dir, name))
+
+
+def commit_dims(spark: SparkSession, checkpoint_dir: str, written: dict,
+                **meta) -> dict:
+    """Swap each dim's manifest to list only its new segment (`written`
+    maps dim name → write_dim's result), recording `meta` (the KB
+    fingerprint and the decisions derived from the dims). A dim built
+    from another KB is replaced, never appended to; its old segment is
+    garbage-collected. Returns the dims read back."""
+    dims = {}
+    for name, (schema, seg) in written.items():
+        path = os.path.join(checkpoint_dir, name)
+        manifest = _swap_manifest(path, name, schema, [seg], **meta)
+        dims[name] = _read_segments(spark, path, manifest, [seg])
+    return dims
 
 
 def load_stage(spark: SparkSession, path: str) -> DataFrame | None:

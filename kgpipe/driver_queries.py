@@ -1252,7 +1252,7 @@ def q_kg_triples(spark, sf_dir):
     )
     res = run_pipeline(
         spark, tr, entity_kb, kb_args, mention_counts, summaries,
-        language="en", check_invariants=False,
+        language="en",
     )
     return res["triples"]
 

@@ -13,15 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType, IntegerType, StringType, StructField, StructType,
-)
-
-SENTENCES = StructType([
-    StructField("sentence_id", IntegerType(), False),
-    StructField("words", ArrayType(StringType()), False),
-    StructField("labels", ArrayType(StringType()), False),
-])
 
 
 def read_conll(spark: SparkSession, path: str) -> DataFrame:

@@ -1,6 +1,6 @@
 """End-to-end KG construction pipeline (SURVEY.md §3 lifecycles recast).
 
-transcripts → W1 order/dedup → tokenize (+text-equality invariant) →
+transcripts → W1 order/dedup → tokenize →
 gazetteer tag → Q1 spans → Q2 marking → J5 candidates → scoring +
 A1 marginalization → J7 acceptance + J6 enrichment → classification →
 (subj, pred, obj) triples.
@@ -8,7 +8,8 @@ A1 marginalization → J7 acceptance + J6 enrichment → classification →
 Every stage takes/returns DataFrames. `run_pipeline` is ONE stage
 graph; only the materialization of its cut points varies: local
 checkpoint, parquet, or — with a checkpoint_dir — resumable commits of
-the `mentions`, `linked` and `enriched` stages (checkpoints.py).
+the `mentions`, `linked` and `enriched` stages (checkpoints.py), next
+to the KB dims committed once for a file-backed KB.
 """
 
 from __future__ import annotations
@@ -20,12 +21,11 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from kgpipe import checkpoints
-from kgpipe.candidates import generate_candidates
+from kgpipe.candidates import _ASCII_RE, generate_candidates
 from kgpipe.classify import classify
 from kgpipe.kb import build_alias_map, build_kb_context, build_title_map
 from kgpipe.mentions import (
-    BROADCAST_MAX_SURFACES, assert_text_equality, detect_mentions_join,
-    tokenize, with_turn_order,
+    BROADCAST_MAX_SURFACES, detect_mentions_join, tokenize, with_turn_order,
 )
 from kgpipe.triples import emit_triples
 
@@ -52,9 +52,20 @@ def surfaces_df_from_dims(alias_map: DataFrame,
     return a.unionByName(b).distinct()
 
 
+def max_fanout(mention_counts: DataFrame) -> int:
+    """Dictionary fan-out: the most distinct QIDs one surface maps to —
+    the entries one in-row probe carries after attach_candidates'
+    (mention, qid) pre-sum."""
+    row = (mention_counts.groupBy("mention")
+           .agg(F.countDistinct("qid").alias("n"))
+           .agg(F.max("n")).collect())
+    return (row[0][0] if row else 0) or 0
+
+
 def build_dims(spark: SparkSession, entity_kb: DataFrame, kb_args: DataFrame,
                mention_counts: DataFrame, wiki_summaries: DataFrame,
-               deferred: bool = False) -> dict:
+               deferred: bool = False,
+               checkpoint_dir: str | None = None) -> dict:
     """KB-construction sub-pipeline (the reference's preprocess_wikidata/
     preprocess_mention_dicts stage): derive, localCheckpoint and return
     the broadcastable lookup dims + the gazetteer surface dim. Separate
@@ -67,8 +78,22 @@ def build_dims(spark: SparkSession, entity_kb: DataFrame, kb_args: DataFrame,
     dim rides an Observation on its materialization job to derive
     `surfaces_broadcastable` (the detect_mentions_join broadcast
     decision) for FREE — zero extra jobs, vs one probe job per tagger
-    call otherwise."""
+    call otherwise.
+
+    checkpoint_dir, with every KB frame a bare file read: the dims are
+    committed there once, as the stage directories checkpoints.DIMS,
+    together with the KB fingerprint, the broadcast decision and
+    `max_fanout`, and later calls on the same KB files read them back
+    with no Spark job (checkpoints.load_dims). Any other KB frame is
+    built as without a checkpoint_dir."""
     from kgpipe.enrich import summary_dim
+
+    fingerprint = checkpoint_dir and checkpoints.kb_fingerprint(
+        [entity_kb, kb_args, mention_counts, wiki_summaries])
+    if fingerprint:
+        committed = checkpoints.load_dims(spark, checkpoint_dir, fingerprint)
+        if committed is not None:
+            return committed
 
     obs = Observation()
     dims = {
@@ -88,6 +113,8 @@ def build_dims(spark: SparkSession, entity_kb: DataFrame, kb_args: DataFrame,
         sc = spark.sparkContext
         sc.setJobDescription(f"kgpipe dim:{name}")  # thread-local
         try:
+            if fingerprint:
+                return checkpoints.write_dim(df, checkpoint_dir, name)
             return df.localCheckpoint(eager=True)
         finally:
             sc.setJobDescription(None)
@@ -98,9 +125,13 @@ def build_dims(spark: SparkSession, entity_kb: DataFrame, kb_args: DataFrame,
     # of the pipeline's constant serial gap, BENCH/LOCAL_sf1_r6),
     # measured 3.8 s → ~1.3 s at sf0.1. Spark job submission is
     # thread-safe; local scheduler interleaves the tiny dim stages.
-    pool = ThreadPoolExecutor(max_workers=len(dims))
+    pool = ThreadPoolExecutor(max_workers=len(dims) + 1)
     futures = {k: pool.submit(_ck, k, v) for k, v in dims.items()}
-    if deferred:
+    if fingerprint:
+        # the committed dims carry the fan-out too: probed once, next
+        # to the dim writes
+        fanout = pool.submit(max_fanout, mention_counts)
+    if deferred and not fingerprint:
         # resolve only the dim the FIRST pipeline stage consumes
         # (the tagger's surface universe); the other checkpoint
         # jobs stay in flight so the caller's mention stage
@@ -112,9 +143,13 @@ def build_dims(spark: SparkSession, entity_kb: DataFrame, kb_args: DataFrame,
     else:
         dims = {k: f.result() for k, f in futures.items()}
         pool.shutdown()
-    dims["surfaces_broadcastable"] = (
-        (obs.get["n"] or 0) <= BROADCAST_MAX_SURFACES)
-    return dims
+    decisions = {"surfaces_broadcastable":
+                 (obs.get["n"] or 0) <= BROADCAST_MAX_SURFACES}
+    if fingerprint:
+        decisions["max_fanout"] = fanout.result()
+        dims = checkpoints.commit_dims(spark, checkpoint_dir, dims,
+                                       kb=fingerprint, **decisions)
+    return {**dims, **decisions}
 
 
 def run_pipeline(
@@ -126,7 +161,6 @@ def run_pipeline(
     wiki_summaries: DataFrame,
     language: str = "en",
     checkpoint_dir: str | None = None,
-    check_invariants: bool = True,
     ensemble_seeds: int = 1,
     work_dir: str | None = None,
     dims: dict | None = None,
@@ -136,7 +170,7 @@ def run_pipeline(
     """Returns dict of stage DataFrames: turns, mentions, linked (the
     slim (mention_id, genre_prediction) frame), enriched, classified,
     triples. Pass `dims` (from build_dims) to reuse prebuilt KB lookups
-    across runs.
+    across runs; they bypass any dims committed under checkpoint_dir.
 
     checkpoint_dir: commit the three durable cut points — mentions,
     linked, enriched — as append-only segments under
@@ -144,7 +178,13 @@ def run_pipeline(
     conversations no earlier run processed, and the upstream segments a
     stage has not consumed (checkpoints.resume_stage). Everything after
     the enriched commit stays lazy, so a caller that only wants the
-    commits pays nothing for classification.
+    commits pays nothing for classification. Layout, each stage
+    directory with its _kgpipe_manifest.json:
+      <checkpoint_dir>/{mentions,linked,enriched}/  append-only segments
+      <checkpoint_dir>/{title_map,kb_context,surfaces_df,summaries_dim}/
+        the KB dims, one segment each (build_dims): committed when every
+        KB frame is a bare file read, read back by a run on the same KB
+        files (which builds no dim), replaced when a KB file changes.
     cut_mode: how the other stage cuts (and, without a checkpoint_dir,
     the durable ones) are materialized — "local" (default:
     localCheckpoint truncates lineage without a parquet roundtrip;
@@ -160,9 +200,11 @@ def run_pipeline(
     # deferred dims: build_dims resolves only the surface dim and leaves
     # the other checkpoint jobs in flight, so the mention stage below
     # overlaps them; _dim() blocks on a still-running future only when
-    # a later stage actually needs that dim.
+    # a later stage actually needs that dim. With a checkpoint_dir the
+    # dims of a file-backed KB are committed once and read back.
     dims = dims or build_dims(spark, entity_kb, kb_args, mention_counts,
-                              wiki_summaries=wiki_summaries, deferred=True)
+                              wiki_summaries=wiki_summaries, deferred=True,
+                              checkpoint_dir=checkpoint_dir)
 
     def _dim(name):
         v = dims.get(name)
@@ -171,8 +213,6 @@ def run_pipeline(
     surfaces_df = _dim("surfaces_df")
 
     turns = tokenize(with_turn_order(transcripts))
-    if check_invariants:
-        assert_text_equality(turns)
 
     from kgpipe.io import read_table, write_table
 
@@ -222,21 +262,20 @@ def run_pipeline(
                                        else source), name)
         return stages[name]
 
-    # fan-out statistic for the candidate-path choice in link(),
-    # computed CONCURRENTLY with the turn/mention cuts (one tiny dim
-    # aggregation; the thread overlaps its job with the stage jobs
-    # exactly like build_dims' deferred checkpoints)
-    def _max_fanout():
-        row = (mention_counts.groupBy("mention")
-               .agg(F.count(F.lit(1)).alias("n"))
-               .agg(F.max("n")).collect())
-        return (row[0][0] if row else 0) or 0
-
-    _fanout_pool = ThreadPoolExecutor(max_workers=1)
-    fanout_future = _fanout_pool.submit(_max_fanout)
-    _fanout_pool.shutdown(wait=False)
+    # fan-out statistic for the candidate-path choice in link(): from
+    # the committed dims, or computed CONCURRENTLY with the turn/mention
+    # cuts (one tiny dim aggregation; the thread overlaps its job with
+    # the stage jobs exactly like build_dims' deferred checkpoints)
+    if "max_fanout" not in dims:
+        _fanout_pool = ThreadPoolExecutor(max_workers=1)
+        dims = {**dims, "max_fanout": _fanout_pool.submit(max_fanout,
+                                                          mention_counts)}
+        _fanout_pool.shutdown(wait=False)
 
     turns_cut = None
+    # non-ASCII turns among those this run tags, counted on the turns
+    # cut's own job (zero extra jobs)
+    ascii_obs = Observation()
 
     def tag(t: DataFrame) -> DataFrame:
         # raw transcripts → token-free mention rows. Tokens stay on a
@@ -250,6 +289,8 @@ def run_pipeline(
         # broadcast decision comes from build_dims' Observation.
         nonlocal turns_cut
         turns_cut = cut(tokenize(with_turn_order(t))
+                        .observe(ascii_obs, F.count_if(
+                            ~F.col("text").rlike(_ASCII_RE)).alias("n"))
                         .select("conv_id", "turn_idx", "tokens"), "turns")
         return detect_mentions_join(
             turns_cut, surfaces_df,
@@ -278,6 +319,19 @@ def run_pipeline(
         # join-strategy note documents (measured: with the hint a
         # 2g/2-core standalone leg ground >30 min inside this stage).
         m_tok = m.join(tokens, ["conv_id", "turn_idx"])
+        # A mention is a token slice of its turn, so when every turn
+        # this run tagged is ASCII and no leftover mention segment (from
+        # turns an earlier run tagged) is pending, every mention text is
+        # ASCII: normalize_mention is the identity, and a given
+        # norm_mention keeps the candidate plan free of the Python UDF
+        # (with_normalized_mention) — the JVM starts no Python worker.
+        all_ascii = (turns_cut is not None and not leftover
+                     and ascii_obs.get["n"] == 0)
+
+        def normalized(df):
+            return (df.withColumn("norm_mention", F.col("text"))
+                    if all_ascii else df)
+
         # Candidate-path choice is DATA-ADAPTIVE on the dictionary's
         # fan-out (max QIDs per surface):
         # - small fan-out (≤ IN_ROW_MAX_FANOUT): the in-row path
@@ -290,11 +344,11 @@ def run_pipeline(
         #   qids/surface even the linear merge blew past a 10-minute
         #   local[8] budget on 1.2M turns where this join shape
         #   finishes the whole pipeline in 232 s (guide §2.5, §4).
-        if fanout_future.result() <= IN_ROW_MAX_FANOUT:
-            hyps = score_hypotheses_inrow(m_tok, mention_counts,
+        if _dim("max_fanout") <= IN_ROW_MAX_FANOUT:
+            hyps = score_hypotheses_inrow(normalized(m_tok), mention_counts,
                                           _dim("title_map"))
         else:
-            cands = generate_candidates(m, mention_counts)
+            cands = generate_candidates(normalized(m), mention_counts)
             hyps = score_hypotheses(cands, m_tok, _dim("title_map"))
         # details=False: texts/scores are per-QID diagnostics nothing
         # here reads; slim rows through the marginalize agg, the rank

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    DoubleType,
     IntegerType,
     LongType,
     MapType,
@@ -46,28 +45,6 @@ TRANSCRIPTS = StructType([
     StructField("ts", TimestampType(), True),
 ])
 
-# One row per detected mention (reference entity record, run_genre.py:77-130).
-MENTION = StructType([
-    StructField("text", StringType(), False),
-    StructField("start", IntegerType(), False),
-    StructField("end", IntegerType(), False),
-    StructField("fine_cat", StringType(), False),
-    StructField("general_cat", StringType(), False),
-])
-
-MENTIONS = StructType([
-    StructField("conv_id", StringType(), False),
-    StructField("turn_idx", IntegerType(), False),
-    StructField("entity_id", IntegerType(), False),
-    StructField("mention_id", StringType(), False),
-    StructField("text", StringType(), False),
-    StructField("start", IntegerType(), False),
-    StructField("end", IntegerType(), False),
-    StructField("fine_cat", StringType(), False),
-    StructField("general_cat", StringType(), False),
-    StructField("marked_text", StringType(), False),
-])
-
 # Wikidata-shaped entity dimension (preprocess_wikidata.py:80-135).
 ENTITY_KB = StructType([
     StructField("qid", StringType(), False),
@@ -82,12 +59,6 @@ KB_ARGS = StructType([
     StructField("prop", StringType(), False),
     StructField("arg_qid", StringType(), False),
     StructField("ord", IntegerType(), False),
-])
-
-TITLE_MAP = StructType([
-    StructField("lang", StringType(), False),
-    StructField("title", StringType(), False),
-    StructField("qid", StringType(), False),
 ])
 
 REDIRECTS = StructType([
@@ -105,28 +76,4 @@ MENTION_COUNTS = StructType([
 WIKI_SUMMARIES = StructType([
     StructField("title", StringType(), False),
     StructField("summary", StringType(), False),
-])
-
-# Ranked linking output per mention (post_process_wikidata semantics,
-# GENRE/genre/utils.py:491-535).
-CANDIDATES = StructType([
-    StructField("mention_id", StringType(), False),
-    StructField("qid", StringType(), False),
-    StructField("texts", ArrayType(StringType()), False),
-    StructField("scores", ArrayType(DoubleType()), False),
-    StructField("score", DoubleType(), False),
-    StructField("rank", IntegerType(), False),
-])
-
-TRIPLES = StructType([
-    StructField("subj", StringType(), False),
-    StructField("pred", StringType(), False),
-    StructField("obj", StringType(), False),
-])
-
-GOLD_LABELS = StructType([
-    StructField("conv_id", StringType(), False),
-    StructField("turn_idx", IntegerType(), False),
-    StructField("tokens", ArrayType(StringType()), False),
-    StructField("tags", ArrayType(StringType()), False),
 ])

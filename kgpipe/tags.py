@@ -18,8 +18,6 @@ from pyspark.sql.types import ArrayType, StringType
 # fine→general category projection (fine2general.py:4-59,
 # category_dictionary.py:19-56). Static public label taxonomy of
 # SemEval-2023 MultiCoNER2 — data, not code.
-GENERAL_CATEGORIES = ["Location", "Person", "Group", "CreativeWork", "Product", "Medical"]
-
 GENERAL2FINE = {
     "Location": ["Facility", "OtherLOC", "HumanSettlement", "Station"],
     "CreativeWork": ["VisualWork", "MusicalWork", "WrittenWork", "ArtWork",

@@ -33,7 +33,7 @@ def main():
         t0 = time.time()
         res = run_pipeline(
             spark, tr, fx["entity_kb"], fx["kb_args"], fx["mention_counts"],
-            fx["wiki_summaries"], language=language, check_invariants=False,
+            fx["wiki_summaries"], language=language,
         )
         spark_triples = {(r["subj"], r["pred"], r["obj"])
                          for r in res["triples"].collect()}

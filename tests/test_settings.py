@@ -84,17 +84,27 @@ def _names(node: ast.AST) -> set:
     return out
 
 
+def _defines(stmt: ast.stmt) -> set:
+    """The names a top-level statement defines: a function, or the
+    targets of an assignment (dunders such as __version__ excepted)."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        return {stmt.name}
+    targets = (stmt.targets if isinstance(stmt, ast.Assign) else
+               [stmt.target] if isinstance(stmt, ast.AnnAssign) else [])
+    return {n.id for t in targets for n in ast.walk(t)
+            if isinstance(n, ast.Name) and not n.id.startswith("__")}
+
+
 def test_every_kgpipe_function_is_named_outside_its_definition():
-    """A top-level function that nothing names, tests included, is dead;
-    a recursive call inside its own body does not count as a use."""
+    """A top-level function or value that nothing names, tests
+    included, is dead; a recursive call inside its own body, or the
+    assignment's own target, does not count as a use."""
     named, defined = set(), []
     for path in SOURCES:
         for stmt in _tree(path).body:
-            used = _names(stmt)
-            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                used.discard(stmt.name)
-                if path.is_relative_to(KGPIPE):
-                    defined.append(f"{path.stem}.{stmt.name}")
-            named |= used
+            own = _defines(stmt)
+            if path.is_relative_to(KGPIPE):
+                defined += [f"{path.stem}.{name}" for name in own]
+            named |= _names(stmt) - own
     unnamed = [d for d in defined if d.rsplit(".", 1)[1] not in named]
     assert not unnamed, unnamed
