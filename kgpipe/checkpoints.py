@@ -34,8 +34,8 @@ directory with a manifest that carries `rows`):
   <checkpoint_dir>/{title_map,kb_context,surfaces_df,summaries_dim}/
                                 the KB dims (DIMS) of a file-backed KB:
                                 one segment each, whose manifests also
-                                record `kb` (kb_fingerprint),
-                                `surfaces_broadcastable` and `max_fanout`
+                                record `kb` (kb_fingerprint) and
+                                `surfaces_broadcastable`
 
 Two ways to find the pending work (`resume_stage`):
 - against a key: the work frame is anti-joined ONCE with the committed
@@ -278,8 +278,7 @@ def load_dims(spark: SparkSession, checkpoint_dir: str,
     dims = {name: _read_segments(spark, paths[name], m, m["segments"])
             for name, m in manifests.items()}
     meta = manifests["surfaces_df"]
-    return {**dims, "surfaces_broadcastable": meta["surfaces_broadcastable"],
-            "max_fanout": meta["max_fanout"]}
+    return {**dims, "surfaces_broadcastable": meta["surfaces_broadcastable"]}
 
 
 def write_dim(df: DataFrame, checkpoint_dir: str, name: str) -> tuple:

@@ -6,6 +6,10 @@ The reference's constrained beam search produces ≤`beam` hypotheses
 "<title> >> <lang>" per mention, maps each to a QID, then marginalizes
 scores per QID with logsumexp(score·len/len^lenpen) and sorts desc.
 
+One linking path: generate_candidates computes the top-k candidates
+once per distinct mention text; score_hypotheses joins them onto the
+token-bearing mention rows on `text` and scores each hypothesis there.
+
 Sandbox stand-in for the neural scorer: a deterministic closed-form
 score over (context, candidate title, anchor-count prior) — the same
 I/O contract (per-mention ranked hypothesis list), implemented entirely
@@ -34,116 +38,33 @@ def score_hypotheses(
     title_map: DataFrame,
     beam: int = DEFAULT_BEAM,
 ) -> DataFrame:
-    """(mention_id, qid, cnt) × title_map → ≤beam scored hypotheses per
-    mention.
+    """(text, qid, cnt) per distinct mention text (generate_candidates)
+    × token-bearing mention rows × title_map → ≤beam scored hypotheses
+    per mention.
 
     score = 0.9·ln(1+cnt) + 1.5·overlap(context, title) − 0.35·len − 3
     where len = token count of "<title> >> <lang>" (as the beam length
     enters the reference's marginalization) and overlap is the fraction
     of title tokens present in the turn.
+
+    The candidates join the mention rows on `text`, so each mention
+    inherits its text's list and is scored while its token array is
+    still ON the row; the only exchange after the candidate table is
+    the beam window, which carries slim rows. The caller decides
+    whether the candidate table is broadcast (run_pipeline: when the
+    surface dim is, since the distinct texts are a subset of the
+    surfaces).
     """
-    # array_distinct below the join: overlap counts DISTINCT common
-    # tokens (array_intersect dedups), so deduping the context tokens
-    # map-side changes nothing — and the ctx exchange, the single
-    # heaviest shuffle stream of the linking block at sf1.0, shrinks
-    # by the per-turn token repetition factor (guide §2.3)
-    ctx = mentions.select(
-        "mention_id", F.array_distinct(F.col("tokens")).alias("ctx_tokens"))
-    # join strategy note (measured on the 1.2M-turn standalone pairs):
-    # forcing shuffle_hash here to skip the sort-merge sorts REGRESSED
-    # the tight-heap legs — the hash build of per-mention token arrays
-    # raised JVM GC ~6× while the Tungsten SMJ sorts it replaced spill
-    # compressed and GC-free. Keep the planner default (SMJ at scale).
-    # hyp_text / hyp_len / title_tokens depend only on the title row —
-    # derived ON THE DIM under the broadcast (once per (qid, lang)
-    # instead of once per hypothesis row; identical expressions and
-    # values, only the evaluation site moves — same move as
-    # score_hypotheses_inrow)
-    tdim = (
-        title_map
-        .withColumn("hyp_text", F.concat_ws(" >> ", F.col("title"),
-                                            F.col("lang")))
-        .withColumn("hyp_len", F.size(F.split(F.col("hyp_text"), " ")))
-        .withColumn("title_tokens", F.split(F.lower(F.col("title")), " "))
-        .select("qid", "hyp_text", "hyp_len", "title_tokens")
-    )
-    hyp = (
-        candidates.join(F.broadcast(tdim), "qid")
-        .join(ctx, "mention_id")
-        .withColumn(
-            "overlap",
-            F.size(F.array_intersect(F.col("ctx_tokens"), F.col("title_tokens")))
-            / F.size(F.col("title_tokens")),
-        )
-        .withColumn(
-            "hyp_score",
-            F.lit(0.9) * F.log(F.lit(1.0) + F.col("cnt"))
-            + F.lit(1.5) * F.col("overlap")
-            - F.lit(0.35) * F.col("hyp_len")
-            - F.lit(3.0),
-        )
-    )
-    w = Window.partitionBy("mention_id").orderBy(
-        F.col("hyp_score").desc(), F.col("hyp_text").asc()
-    )
-    return (
-        hyp.withColumn("beam_rank", F.row_number().over(w))
-        .filter(F.col("beam_rank") <= beam)
-        .select("mention_id", "qid", "hyp_text", "hyp_len", "hyp_score", "beam_rank")
-    )
-
-
-def score_hypotheses_inrow(
-    mentions: DataFrame,
-    mention_counts: DataFrame,
-    title_map: DataFrame,
-    beam: int = DEFAULT_BEAM,
-    max_candidates: int = 8,
-) -> DataFrame:
-    """score_hypotheses ∘ generate_candidates with ZERO exchanges
-    before the beam window (r7).
-
-    Candidates are attached in-row (attach_candidates: broadcast
-    probes + per-row merge/sort/cap, no groupBy), exploded, broadcast-
-    joined to title_map, and scored while the mention's token array is
-    still ON the row — so the r6 ctx re-join (which shuffled every
-    mention's token array into the hypothesis stream, the heaviest
-    exchange of the linking block at sf1.0, ~149 MB after dedup) does
-    not exist. The first exchange of the whole linking chain is the
-    beam window, which carries slim (mention_id, qid, hyp_text,
-    hyp_len, hyp_score) rows.
-
-    Output schema and values identical to
-    score_hypotheses(generate_candidates(...), ...): candidate sets
-    match (attach_candidates merges/caps exactly like the groupBy
-    form), overlap counts DISTINCT common tokens either way, and the
-    scoring expressions are the same trees (equivalence pytest +
-    identical q25 oracle hash). Measured sf1.0 warm linked block:
-    6.07 → 3.99 s at local[32]; 4.02 → 3.89 s at local[8] (the r1
-    all-array pathology does not apply — each interpreted array
-    expression here has exactly one consumer and is exploded
-    immediately)."""
-    from kgpipe.candidates import attach_candidates
-
-    wc = attach_candidates(mentions, mention_counts,
-                           max_candidates=max_candidates)
-    # array_distinct ONCE per mention, below the explode (the Generate
-    # keeps its input projections per input row, so the dedup runs 450k
-    # times, not 3.6M): overlap counts DISTINCT common tokens either
-    # way (array_intersect dedups), and the per-hypothesis
-    # array_intersect then scans ~40% fewer elements (guide §2.3 —
-    # same trick the r6 ctx exchange used, applied in-row)
-    cand_rows = wc.select(
-        "mention_id", F.array_distinct("tokens").alias("tokens"),
-        F.explode("candidates").alias("_c")
-    ).select("mention_id", "tokens",
-             F.col("_c.qid").alias("qid"), F.col("_c.cnt").alias("cnt"))
+    # array_distinct ONCE per mention, below the join: overlap counts
+    # DISTINCT common tokens either way (array_intersect dedups), and
+    # the per-hypothesis array_intersect then scans fewer elements
+    # (guide §2.3)
+    m = mentions.select("mention_id", "text",
+                        F.array_distinct("tokens").alias("tokens"))
     # hyp_text / hyp_len / title_tokens depend only on the title row,
-    # so they are derived ON THE DIM under the broadcast — evaluated
-    # once per (qid, lang) instead of once per hypothesis row (3.6M×
-    # at sf1.0; two splits + a concat per row were pure repetition).
-    # Identical expressions, identical values — only the evaluation
-    # site moves (guide §3.1 "enrich the build side").
+    # so they are derived ON THE DIM under the broadcast — once per
+    # (qid, lang) instead of once per hypothesis row (guide §3.1
+    # "enrich the build side")
     tdim = (
         title_map
         .withColumn("hyp_text", F.concat_ws(" >> ", F.col("title"),
@@ -153,7 +74,8 @@ def score_hypotheses_inrow(
         .select("qid", "hyp_text", "hyp_len", "title_tokens")
     )
     hyp = (
-        cand_rows.join(F.broadcast(tdim), "qid")
+        m.join(candidates, "text")
+        .join(F.broadcast(tdim), "qid")
         .withColumn(
             "overlap",
             F.size(F.array_intersect(F.col("tokens"), F.col("title_tokens")))
@@ -178,6 +100,23 @@ def score_hypotheses_inrow(
         .select("mention_id", "qid", "hyp_text", "hyp_len", "hyp_score",
                 "beam_rank")
     )
+
+
+def score_hypotheses_inrow(
+    mentions: DataFrame,
+    mention_counts: DataFrame,
+    title_map: DataFrame,
+    beam: int = DEFAULT_BEAM,
+    max_candidates: int = 8,
+) -> DataFrame:
+    """score_hypotheses ∘ generate_candidates on token-bearing mention
+    rows. Kept only for perfbench (tracing.py and tests/test_gen.py
+    import it); run_pipeline composes the two itself."""
+    from kgpipe.candidates import generate_candidates
+
+    return score_hypotheses(
+        generate_candidates(mentions, mention_counts, max_candidates),
+        mentions, title_map, beam)
 
 
 def marginalize(hypotheses: DataFrame,

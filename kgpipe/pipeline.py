@@ -1,7 +1,8 @@
 """End-to-end KG construction pipeline (SURVEY.md §3 lifecycles recast).
 
 transcripts → W1 order/dedup → tokenize →
-gazetteer tag → Q1 spans → Q2 marking → J5 candidates → scoring +
+gazetteer tag → Q1 spans → Q2 marking → J5 candidates (once per
+distinct mention text) → scoring on the token-bearing mention rows +
 A1 marginalization → J7 acceptance + J6 enrichment → classification →
 (subj, pred, obj) triples.
 
@@ -30,13 +31,9 @@ from kgpipe.mentions import (
 from kgpipe.triples import emit_triples
 
 
-# Dictionary fan-out (max QIDs per surface) above which the linking
-# stage uses the join/groupBy/window candidate path instead of the
-# in-row merge: the in-row higher-order expressions are interpreted and
-# their per-mention cost grows with fan-out (see the decision comment
-# in run_pipeline); the join path is fan-out-insensitive (codegen'd).
-# 4 is conservative — at fan-out 4 the two probes give ≤8 in-row
-# entries, still a few interpreted evals per mention.
+# Read only by perfbench (tracing.py and tests/test_gen.py), whose
+# traced default path still picks between two compositions of the one
+# linking path by dictionary fan-out; nothing in kgpipe reads it.
 IN_ROW_MAX_FANOUT = 4
 
 
@@ -50,16 +47,6 @@ def surfaces_df_from_dims(alias_map: DataFrame,
     a = alias_map.select(F.col("alias_lc").alias("surface"))
     b = mention_counts.select(F.col("mention").alias("surface"))
     return a.unionByName(b).distinct()
-
-
-def max_fanout(mention_counts: DataFrame) -> int:
-    """Dictionary fan-out: the most distinct QIDs one surface maps to —
-    the entries one in-row probe carries after attach_candidates'
-    (mention, qid) pre-sum."""
-    row = (mention_counts.groupBy("mention")
-           .agg(F.countDistinct("qid").alias("n"))
-           .agg(F.max("n")).collect())
-    return (row[0][0] if row else 0) or 0
 
 
 def build_dims(spark: SparkSession, entity_kb: DataFrame, kb_args: DataFrame,
@@ -82,10 +69,10 @@ def build_dims(spark: SparkSession, entity_kb: DataFrame, kb_args: DataFrame,
 
     checkpoint_dir, with every KB frame a bare file read: the dims are
     committed there once, as the stage directories checkpoints.DIMS,
-    together with the KB fingerprint, the broadcast decision and
-    `max_fanout`, and later calls on the same KB files read them back
-    with no Spark job (checkpoints.load_dims). Any other KB frame is
-    built as without a checkpoint_dir."""
+    together with the KB fingerprint and the broadcast decision, and
+    later calls on the same KB files read them back with no Spark job
+    (checkpoints.load_dims). Any other KB frame is built as without a
+    checkpoint_dir."""
     from kgpipe.enrich import summary_dim
 
     fingerprint = checkpoint_dir and checkpoints.kb_fingerprint(
@@ -125,12 +112,8 @@ def build_dims(spark: SparkSession, entity_kb: DataFrame, kb_args: DataFrame,
     # of the pipeline's constant serial gap, BENCH/LOCAL_sf1_r6),
     # measured 3.8 s → ~1.3 s at sf0.1. Spark job submission is
     # thread-safe; local scheduler interleaves the tiny dim stages.
-    pool = ThreadPoolExecutor(max_workers=len(dims) + 1)
+    pool = ThreadPoolExecutor(max_workers=len(dims))
     futures = {k: pool.submit(_ck, k, v) for k, v in dims.items()}
-    if fingerprint:
-        # the committed dims carry the fan-out too: probed once, next
-        # to the dim writes
-        fanout = pool.submit(max_fanout, mention_counts)
     if deferred and not fingerprint:
         # resolve only the dim the FIRST pipeline stage consumes
         # (the tagger's surface universe); the other checkpoint
@@ -146,7 +129,6 @@ def build_dims(spark: SparkSession, entity_kb: DataFrame, kb_args: DataFrame,
     decisions = {"surfaces_broadcastable":
                  (obs.get["n"] or 0) <= BROADCAST_MAX_SURFACES}
     if fingerprint:
-        decisions["max_fanout"] = fanout.result()
         dims = checkpoints.commit_dims(spark, checkpoint_dir, dims,
                                        kb=fingerprint, **decisions)
     return {**dims, **decisions}
@@ -262,16 +244,6 @@ def run_pipeline(
                                        else source), name)
         return stages[name]
 
-    # fan-out statistic for the candidate-path choice in link(): from
-    # the committed dims, or computed CONCURRENTLY with the turn/mention
-    # cuts (one tiny dim aggregation; the thread overlaps its job with
-    # the stage jobs exactly like build_dims' deferred checkpoints)
-    if "max_fanout" not in dims:
-        _fanout_pool = ThreadPoolExecutor(max_workers=1)
-        dims = {**dims, "max_fanout": _fanout_pool.submit(max_fanout,
-                                                          mention_counts)}
-        _fanout_pool.shutdown(wait=False)
-
     turns_cut = None
     # non-ASCII turns among those this run tags, counted on the turns
     # cut's own job (zero extra jobs)
@@ -307,16 +279,12 @@ def run_pipeline(
     tokens = (turns.select("conv_id", "turn_idx", "tokens") if leftover
               else turns_cut)
 
-    from kgpipe.linking import (
-        marginalize, predictions_frame, score_hypotheses,
-        score_hypotheses_inrow,
-    )
+    from kgpipe.linking import marginalize, predictions_frame, score_hypotheses
 
     def link(m: DataFrame) -> DataFrame:
         # planner-default join (SMJ at scale) — NO shuffle_hash hint:
-        # hash-building a partition's worth of turn TOKEN ARRAYS
-        # re-creates the tight-heap pathology the score_hypotheses
-        # join-strategy note documents (measured: with the hint a
+        # hash-building a partition's worth of turn TOKEN ARRAYS raised
+        # JVM GC ~6× on tight heaps (measured: with the hint a
         # 2g/2-core standalone leg ground >30 min inside this stage).
         m_tok = m.join(tokens, ["conv_id", "turn_idx"])
         # A mention is a token slice of its turn, so when every turn
@@ -328,28 +296,16 @@ def run_pipeline(
         all_ascii = (turns_cut is not None and not leftover
                      and ascii_obs.get["n"] == 0)
 
-        def normalized(df):
-            return (df.withColumn("norm_mention", F.col("text"))
-                    if all_ascii else df)
-
-        # Candidate-path choice is DATA-ADAPTIVE on the dictionary's
-        # fan-out (max QIDs per surface):
-        # - small fan-out (≤ IN_ROW_MAX_FANOUT): the in-row path
-        #   (attach_candidates merge + on-row scoring) — zero exchanges
-        #   before the beam window; measured ~1.5 s faster per sf1.0
-        #   run at the bench lexicon's fan-out of 1.
-        # - larger fan-out: the JOIN/groupBy/window composition (every
-        #   operator codegen'd). The in-row higher-order expressions
-        #   are INTERPRETED and their cost scales with fan-out: at 84
-        #   qids/surface even the linear merge blew past a 10-minute
-        #   local[8] budget on 1.2M turns where this join shape
-        #   finishes the whole pipeline in 232 s (guide §2.5, §4).
-        if _dim("max_fanout") <= IN_ROW_MAX_FANOUT:
-            hyps = score_hypotheses_inrow(normalized(m_tok), mention_counts,
-                                          _dim("title_map"))
-        else:
-            cands = generate_candidates(normalized(m), mention_counts)
-            hyps = score_hypotheses(cands, m_tok, _dim("title_map"))
+        # candidates once per distinct mention text; the tagger's
+        # broadcast decision covers them, since the distinct texts are a
+        # subset of the surface dim. Called through this module's
+        # attribute, which perfbench's traced resume wraps.
+        cands = generate_candidates(
+            m.withColumn("norm_mention", F.col("text")) if all_ascii else m,
+            mention_counts)
+        if dims.get("surfaces_broadcastable"):
+            cands = F.broadcast(cands)
+        hyps = score_hypotheses(cands, m_tok, _dim("title_map"))
         # details=False: texts/scores are per-QID diagnostics nothing
         # here reads; slim rows through the marginalize agg, the rank
         # window and the fold

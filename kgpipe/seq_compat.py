@@ -146,8 +146,8 @@ def align_from_pieces(pieces_per_word: List[List[str]], labels: List[str],
 
     A user with a real tokenizer plugs in here: materialize a
     `pieces array<array<string>>` column (one tokenizer call per word
-    batch, outside Spark or in its own mapInPandas stage) and alignment
-    needs no re-plumbing — see align_from_pieces_udf."""
+    batch, outside Spark or in its own mapInPandas stage) and align it
+    with this function."""
     subtokens, out = ["[CLS]"], [IGNORE_LABEL]
     for pieces, lab in zip(pieces_per_word, labels):
         pieces = list(pieces) or [""]
@@ -187,24 +187,6 @@ def align_subword_labels_udf(label_all_tokens: bool = False,
         rows = [align_subword_labels(list(w), list(l), label_all_tokens,
                                      label_list=label_list)
                 for w, l in zip(words, labels)]
-        return pd.DataFrame(
-            {"subtokens": [r[0] for r in rows],
-             "aligned_labels": [r[1] for r in rows]})
-    return udf
-
-
-def align_from_pieces_udf(label_all_tokens: bool = False,
-                          label_list: Optional[List[str]] = None):
-    """Q6 adapter UDF for externally-supplied tokenizations: consumes a
-    `pieces array<array<string>>` column (pieces_per_word, e.g. from a
-    real HF fast tokenizer run in its own stage) + the word labels.
-    Alignment logic is shared with the stand-in path — only the piece
-    producer differs."""
-    @F.pandas_udf(_ALIGN_SCHEMA)
-    def udf(pieces: pd.Series, labels: pd.Series) -> pd.DataFrame:
-        rows = [align_from_pieces([list(p) for p in pw], list(l),
-                                  label_all_tokens, label_list=label_list)
-                for pw, l in zip(pieces, labels)]
         return pd.DataFrame(
             {"subtokens": [r[0] for r in rows],
              "aligned_labels": [r[1] for r in rows]})

@@ -69,10 +69,14 @@ def _wide_predictions(res, fw):
 
 @pytest.fixture(params=["join", "inrow"])
 def linking_path(request, monkeypatch):
-    """The fixture's fan-out (5) takes the join path; a raised bound
-    takes the in-row path."""
-    if request.param == "inrow":
-        monkeypatch.setattr(P, "IN_ROW_MAX_FANOUT", 10_000)
+    """The two plans of the one linking path. "inrow": the fixture's
+    surfaces are broadcastable, so the per-text candidate table is
+    broadcast onto the token-bearing mention rows and scored there
+    without moving them. "join": a zero broadcast bound makes build_dims
+    decide the surfaces are not broadcastable, so neither the tagger
+    nor link() hints a broadcast and the planner chooses the joins."""
+    if request.param == "join":
+        monkeypatch.setattr(P, "BROADCAST_MAX_SURFACES", 0)
     return request.param
 
 
@@ -183,8 +187,8 @@ def _segment_dirs(ckdir, stage):
 def test_resume_reuses_committed_dims(spark, fixture_set, kb_files, tmp_path,
                                       monkeypatch, default_triples):
     """The first run commits the four dims under checkpoint_dir; a
-    resume on the same KB files builds no dim and probes no fan-out,
-    and its triples equal the default path's."""
+    resume on the same KB files builds no dim, and its triples equal
+    the default path's."""
     ckdir = str(tmp_path / "ck")
     half, full = _halves(fixture_set)
     _run(spark, half, kb_files(), checkpoint_dir=ckdir)
@@ -194,13 +198,12 @@ def test_resume_reuses_committed_dims(spark, fixture_set, kb_files, tmp_path,
         assert len(m["segments"]) == 1 and m["rows"] > 0
         assert m["kb"] == before["title_map"]["kb"]
         assert m["surfaces_broadcastable"] is True
-        assert m["max_fanout"] == P.max_fanout(fixture_set["mention_counts"])
+        assert "max_fanout" not in m
 
     def no_build(*args, **kwargs):
         raise AssertionError("a dim was rebuilt")
 
-    for name in ("build_title_map", "build_kb_context", "build_alias_map",
-                 "max_fanout"):
+    for name in ("build_title_map", "build_kb_context", "build_alias_map"):
         monkeypatch.setattr(P, name, no_build)
     assert _triples(_run(spark, full, kb_files(),
                          checkpoint_dir=ckdir)) == default_triples

@@ -2,6 +2,7 @@
 classification/vote (A2) unit tests."""
 
 import math
+import re
 
 from pyspark.sql import functions as F
 
@@ -12,7 +13,7 @@ from kgpipe.enrich import (
     acceptance_decisions, attach_predictions_and_decisions,
 )
 from kgpipe.kb import build_kb_context
-from kgpipe.linking import marginalize
+from kgpipe.linking import marginalize, score_hypotheses
 
 
 def test_candidate_topk_and_tiebreak(spark):
@@ -152,40 +153,6 @@ def test_majority_vote_tiebreak(spark):
     assert out["k2"] == "B-Y"  # tie → label asc ("B-Y" < "O")
 
 
-def test_score_hypotheses_inrow_equivalence(spark):
-    """The r7 zero-exchange hypothesis path (attach_candidates in-row +
-    on-row overlap) must reproduce score_hypotheses∘generate_candidates
-    row for row — candidates, hyp text/len, float scores, beam ranks."""
-    from kgpipe.candidates import generate_candidates
-    from kgpipe.linking import score_hypotheses, score_hypotheses_inrow
-
-    mentions = spark.createDataFrame(
-        [("m1", "eli lilly", ["drug", "maker", "eli", "lilly", "corp"]),
-         ("m2", "iker", ["iker", "of", "spain", "casillas"]),
-         ("m3", "nothing", ["zz", "top"]),
-         ("m4", "eli", ["eli", "alone"])],
-        "mention_id string, text string, tokens array<string>")
-    mc = spark.createDataFrame(
-        [("eli lilly", "Q1", 10), ("eli lilly", "Q2", 3),
-         ("eli", "Q3", 7), ("iker", "Q4", 2), ("iker", "Q5", 2),
-         ("Eli", "Q6", 1)],
-        "mention string, qid string, cnt long")
-    tm = spark.createDataFrame(
-        [("en", "Eli Lilly Corp", "Q1"), ("de", "Eli Lilly", "Q1"),
-         ("en", "Lilly", "Q2"), ("en", "Eli", "Q3"),
-         ("en", "Iker Casillas", "Q4")],
-        "lang string, title string, qid string")
-    old = score_hypotheses(
-        generate_candidates(mentions, mc, max_candidates=2),
-        mentions, tm, beam=3)
-    new = score_hypotheses_inrow(mentions, mc, tm, beam=3,
-                                 max_candidates=2)
-    o = sorted(tuple(r) for r in old.collect())
-    n = sorted(tuple(r) for r in new.collect())
-    assert o == n
-    assert len(n) > 0
-
-
 def test_slim_foldback_equivalence(spark):
     """The slim fold-back (predictions_frame + terminal
     attach_predictions_and_decisions) is row-identical to feeding the
@@ -232,39 +199,56 @@ def test_slim_foldback_equivalence(spark):
     assert m0["wikipedia_summary"] == schemas.NO_WIKIPEDIA_SUMMARY
 
 
-def test_attach_candidates_linear_merge_stress(spark):
-    """The r7 linear in-row candidate merge (sorted adjacent-pair sum,
-    replacing the O(k²) per-qid filter scans) must equal
-    generate_candidates on a HEAVY fan-out: many qids per surface,
-    duplicate (mention, qid) source rows (pre-summed in the broadcast
-    build), exact+lowercase double-hit surfaces, and tie counts."""
-    from kgpipe.candidates import attach_candidates, generate_candidates
-
-    mc_rows = []
-    # surface "fat": 60 qids, with duplicate source rows for some qids
-    for i in range(60):
-        mc_rows.append(("fat", f"Q{i + 1}", (i * 7) % 13 + 1))
-        if i % 5 == 0:
-            mc_rows.append(("fat", f"Q{i + 1}", 2))  # dup (mention,qid)
-    # case-variant surface: exact probe hits "Fat", lowered hits "fat"
-    mc_rows.append(("Fat", "Q1", 100))
-    mc = spark.createDataFrame(mc_rows, "mention string, qid string, cnt long")
+def test_candidates_once_per_distinct_text(spark):
+    """Candidates are looked up once per distinct mention text: 100
+    mentions over 2 texts at a fan-out of 60 QIDs give at most
+    2 × max_candidates candidate rows, not one list per mention."""
+    mc = spark.createDataFrame(
+        [("fat", f"Q{i + 1}", (i * 7) % 13 + 1) for i in range(60)]
+        + [("Fat", "Q1", 100)], schema=schemas.MENTION_COUNTS)
     mentions = spark.createDataFrame(
-        [("m1", "fat"), ("m2", "Fat"), ("m3", "miss")],
+        [(f"m{i}", "fat" if i % 2 else "Fat") for i in range(100)],
         "mention_id string, text string")
+    out = generate_candidates(mentions, mc, max_candidates=8).collect()
+    assert len(out) <= 2 * 8
+    assert sorted(r["text"] for r in out) == ["Fat"] * 8 + ["fat"] * 8
 
-    old = generate_candidates(mentions, mc, max_candidates=10).select(
-        "mention_id", "qid", "cnt", "cand_rank")
-    wc = attach_candidates(mentions, mc, max_candidates=10)
-    new = wc.select(
-        "mention_id", F.posexplode("candidates").alias("_r0", "_c")
-    ).select("mention_id", F.col("_c.qid").alias("qid"),
-             F.col("_c.cnt").alias("cnt"),
-             (F.col("_r0") + 1).alias("cand_rank"))
-    o = sorted(tuple(r) for r in old.collect())
-    n = sorted(tuple(r) for r in new.collect())
-    assert o == n
-    assert len(n) > 0
+
+def test_linking_plan_broadcasts_candidates_per_text(spark, fixture_set):
+    """The linking chain as run_pipeline's link() builds it on the
+    fixture: the per-text candidate table enters through a broadcast
+    hash join on `text`, no join shuffles the token-bearing mention rows
+    on mention_id, an all-ASCII norm_mention plans no Python UDF, and
+    the chain keeps its 5 shuffle exchanges: the distinct texts (once
+    per probe branch), the (text, qid) groupBy, the top-k window and the
+    beam window. Without the broadcast hint the text join is a
+    sort-merge join with a sixth exchange."""
+    from kgpipe.mentions import detect_mentions_join, tokenize, with_turn_order
+    from kgpipe.pipeline import build_dims
+
+    fx = fixture_set
+    dims = build_dims(spark, fx["entity_kb"], fx["kb_args"],
+                      fx["mention_counts"], fx["wiki_summaries"])
+    turns = tokenize(with_turn_order(fx["transcripts"])).select(
+        "conv_id", "turn_idx", "tokens").localCheckpoint(eager=True)
+    m = detect_mentions_join(
+        turns, dims["surfaces_df"],
+        broadcast_dim=dims["surfaces_broadcastable"],
+    ).drop("tokens").localCheckpoint(eager=True)
+    m_tok = m.join(turns, ["conv_id", "turn_idx"])
+    cands = generate_candidates(m.withColumn("norm_mention", F.col("text")),
+                                fx["mention_counts"])
+    assert dims["surfaces_broadcastable"]
+    cands = F.broadcast(cands)  # the tagger's decision, as link() applies it
+    plan = score_hypotheses(cands, m_tok, dims["title_map"]) \
+        ._jdf.queryExecution().executedPlan().toString()
+
+    assert re.search(
+        r"BroadcastHashJoin \[text#\d+\], \[text#\d+\], Inner, BuildRight",
+        plan), plan
+    assert not re.search(r"Join \[[^\]]*mention_id#", plan), plan
+    assert "EvalPython" not in plan
+    assert len(re.findall(r"(?<!Broadcast)Exchange ", plan)) == 5, plan
 
 
 def test_classifier_scores_match_python_argmax(spark):

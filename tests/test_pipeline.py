@@ -425,22 +425,51 @@ def test_checkpoint_gc_retains_parent(spark, tmp_path):
     assert ks(live) == [1]
 
 
-def test_linking_branch_equivalence(spark, fixture_set, monkeypatch):
-    """The fan-out-adaptive linking must produce identical triples on
-    BOTH branches: the fixture's fan-out (5) picks the join/groupBy
-    path by default; forcing the threshold up picks the in-row path.
-    Exact triple-set equality, not just P/R."""
-    from kgpipe import pipeline as P
+def test_fanout_60_linking_matches_oracle(spark, fixture_set, tmp_path):
+    """At a dictionary fan-out of 60 QIDs per surface (with duplicate
+    (mention, qid) rows, a Fat/fat case pair and a fullwidth variant
+    that normalizes to `fat`), every mention's genre_prediction equals
+    the reference semantics (link_one), on the default path and the
+    checkpoint_dir path."""
+    from kgpipe import schemas
+    from kgpipe.oracle.reference_semantics import OracleKB, link_one
 
-    res_join = _run(spark, fixture_set)
-    t_join = {(r["subj"], r["pred"], r["obj"])
-              for r in res_join["triples"].collect()}
-    monkeypatch.setattr(P, "IN_ROW_MAX_FANOUT", 10_000)
-    res_inrow = _run(spark, fixture_set)
-    t_inrow = {(r["subj"], r["pred"], r["obj"])
-               for r in res_inrow["triples"].collect()}
-    assert t_join == t_inrow
-    assert len(t_join) > 0
+    catalog = fixture_set["catalog"]
+    ents = catalog.entities[:60]
+    rows = []
+    for i, e in enumerate(ents):
+        rows.append(("fat", e.qid, (i * 7) % 13 + 1))
+        if i % 5 == 0:
+            rows.append(("fat", e.qid, 2))  # duplicate (mention, qid)
+    rows.append(("Fat", ents[0].qid, 100))  # exact "Fat", lowered "fat"
+    # the fullwidth surface is tagged, but its one QID is found only by
+    # an unnormalized probe: NFKD maps it to "fat"
+    fw = "".join(chr(ord(c) + 0xFEE0) for c in "fat")
+    rows.append((fw, catalog.entities[60].qid, 10_000))
+    kb = OracleKB(catalog)
+    for mention, qid, cnt in rows:
+        kb.mention_counts[mention][qid] = (
+            kb.mention_counts[mention].get(qid, 0) + cnt)
+
+    titles = [e.surfaces[0] for e in (ents[3], ents[17], ents[42])]
+    texts = ["i ate fat today", f"Fat and {titles[0]} again",
+             f"{fw} then {titles[1]} and {fw}", f"fat {titles[2]} Fat"]
+    fx = {**fixture_set,
+          "mention_counts": fixture_set["mention_counts"].unionByName(
+              spark.createDataFrame(rows, schema=schemas.MENTION_COUNTS)),
+          "transcripts": spark.createDataFrame(
+              [("conv-fat", i, "user", t, None, None)
+               for i, t in enumerate(texts)], schema=schemas.TRANSCRIPTS)}
+
+    for ckdir in (None, str(tmp_path / "ck")):
+        res = _run(spark, fx, checkpoint_dir=ckdir)
+        got = res["mentions"].join(
+            res["enriched"].select("mention_id", "genre_prediction"),
+            "mention_id").collect()
+        assert sum(r["text"] in ("fat", "Fat", fw) for r in got) == 6
+        for r in got:
+            expected = link_one(r["text"], texts[r["turn_idx"]].split(" "), kb)
+            assert list(r["genre_prediction"]) == expected, r["text"]
 
 
 def test_checkpoint_old_layout_raises(tmp_path):

@@ -89,20 +89,3 @@ def test_align_from_pieces_external_tokenizer():
         [["AB", "CD"]], ["B-MISC"], label_all_tokens=True,
         label_list=["O", "B-MISC", "I-MISC"])
     assert al3 == ["-100", "B-MISC", "I-MISC", "-100"]
-
-
-def test_align_from_pieces_udf_roundtrip(spark):
-    from pyspark.sql import functions as F
-
-    from kgpipe.seq_compat import align_from_pieces_udf
-
-    df = spark.createDataFrame(
-        [(1, [["Ho", "##la"], ["mundo"]], ["B-GRT", "O"])],
-        "id int, pieces array<array<string>>, labels array<string>",
-    )
-    out = df.withColumn(
-        "a", align_from_pieces_udf(label_all_tokens=True)("pieces", "labels")
-    ).select(F.col("a.subtokens").alias("st"),
-             F.col("a.aligned_labels").alias("al")).collect()[0]
-    assert out["st"] == ["[CLS]", "Ho", "##la", "mundo", "[SEP]"]
-    assert out["al"] == ["-100", "B-GRT", "I-GRT", "O", "-100"]
